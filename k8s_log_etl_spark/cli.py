@@ -247,7 +247,9 @@ def run_batch(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSession
                 "CASE WHEN NOT json_ok THEN 'json parse failed' ELSE norm_error END AS error",
             )
         ).coalesce(1).write.mode("append").text(cfg.dlq_path)
-        rep.dlq_written += bad.count()
+        # `bad` is exactly the json-failed plus the normalize-failed
+        # rows, both already counted by the observation: no count job.
+        rep.dlq_written += rep.json_failed + rep.normalized_failed
     rep.duration_sec = time.monotonic() - start
     df.unpersist()
     return rep
@@ -274,11 +276,28 @@ def run_curate(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSessio
     new drops are anti-joined against it BEFORE the expensive
     clean/near-dup stages (keyed on the 32-byte digest — constant
     shuffle width regardless of document size), and the state is
-    extended with this run's survivors. Re-running the same drop is a
-    no-op; at 100 TB only the delta pays cleaning cost."""
+    extended with this run's survivors. At 100 TB only the delta pays
+    cleaning cost.
+
+    What the state suppresses: any document whose canonical hash was
+    kept before — a re-sent survivor or an exact duplicate of one.
+    What it does not: the state holds no hash of a DROPPED document,
+    so re-running the same drop is not a no-op. A near-duplicate
+    dropped in run 1 (its hash differs from its kept partner's) finds
+    that partner anti-joined away in run 2, survives, and is written
+    and added to the state there.
+
+    The survivors (and the anti-joined input) are materialized with
+    `spill_checkpoint`, not `.cache()`: a cached plan keeps its final
+    shuffle at the initial partition count (AQE does not coalesce
+    cached plans here), so the write, the state append and the stats
+    would each run that many tasks; and the state append would drop
+    any cached plan reading the state path, re-running the chain
+    against the extended state for the stats."""
     import os as _os
 
     from k8s_log_etl_spark.queries.text import corpus_survivors
+    from k8s_log_etl_spark.tables import spill_checkpoint
 
     if not cfg.output_path:
         raise SystemExit("--output-path required in --curate mode")
@@ -296,12 +315,12 @@ def run_curate(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSessio
         if _os.path.isdir(args.state_path) and _os.listdir(args.state_path):
             seen = spark.read.parquet(args.state_path).select("h").distinct()
             before = docs.count()
-            docs = docs.join(
-                seen.withColumnRenamed("h", "_h"), "_h", "left_anti"
-            ).cache()
+            docs = spill_checkpoint(
+                docs.join(seen.withColumnRenamed("h", "_h"), "_h", "left_anti")
+            )
             n_seen_dropped = before - docs.count()
 
-    survivors = corpus_survivors(docs).cache()
+    survivors = spill_checkpoint(corpus_survivors(docs))
     # Partitioned by lang: downstream per-language reads (sampling,
     # packing, mixing) prune to their partition instead of scanning the
     # whole cleaned corpus.
@@ -327,7 +346,6 @@ def run_curate(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSessio
         .orderBy("lang")
         .collect()
     )
-    survivors.unpersist()
     report = {
         "seen_dropped": n_seen_dropped,
         "kept_docs": sum(r["n_docs"] for r in stats),

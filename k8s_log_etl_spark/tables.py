@@ -64,10 +64,11 @@ def ensure_min_parallelism(df: DataFrame, spark: SparkSession, *keys: str) -> Da
     round-robin (round-14): a keyless repartition first pays a LOCAL
     SORT of its input on the (single) scan task so retried tasks
     reproduce their row assignment (sortBeforeRepartition, guide §2.5)
-    — measured as a net regression on the collect_set edge builds —
-    while a hash exchange on the downstream aggregation's own group key
-    needs no sort AND is reused by the aggregation (no second
-    exchange): the single-task work drops to scan + shuffle write."""
+    — measured as a net regression on the collect_set edge builds. A
+    hash exchange always avoids that sort. It is ALSO reused by the
+    downstream aggregation (no second exchange) only when `keys` equal
+    that aggregation's group key; with any other keys the aggregation
+    still shuffles again."""
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         if keys:

@@ -117,6 +117,40 @@ def test_cli_dlq_reasons(spark, tmp_path, monkeypatch):
     assert reasons == ["json parse failed", "missing timestamp: expected ts/time in RFC3339"]
 
 
+def test_cli_dlq_written_matches_dlq_lines(spark, tmp_path, monkeypatch):
+    """The report's dlq_written is the observed json-failed plus
+    normalize-failed count, and equals the lines the DLQ holds."""
+    src = tmp_path / "mixed.jsonl"
+    src.write_text(
+        "not json\n"
+        "{broken\n"
+        '{"level":"INFO","msg":"no ts"}\n'
+        '{"ts":"not a time","level":"WARN","msg":"bad ts"}\n'
+        + "\n".join(GOLDEN_LINES) + "\n"
+    )
+    dlq = str(tmp_path / "dlq")
+    report_path = str(tmp_path / "report.json")
+    monkeypatch.setattr(cli, "get_spark", lambda **_kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    rc = cli.main(
+        ["--input", str(src), "--output-type", "file",
+         "--output-path", str(tmp_path / "out"), "--dlq-path", dlq,
+         "--report-path", report_path]
+    )
+    assert rc == 0
+    dlq_lines = [
+        line
+        for p in os.listdir(dlq)
+        if p.startswith("part-")
+        for line in open(os.path.join(dlq, p)).read().splitlines()
+    ]
+    rep = json.loads(open(report_path).read())
+    assert rep["json_failed"] == 2
+    assert rep["dlq_written"] == len(dlq_lines) == (
+        rep["json_failed"] + rep["normalized_failed"]
+    ) > rep["json_failed"]
+
+
 def test_report_rates(spark):
     df = lognorm.run_pipeline(
         spark.createDataFrame(
@@ -262,6 +296,15 @@ def test_cli_curate_mode(spark, tmp_path, monkeypatch):
     rep = json.loads(open(report_path).read())
     assert written.count() == rep["kept_docs"] > 0
     assert "text" in written.columns and "doc_id" in written.columns
+    # The write reads AQE-coalesced survivors: at most one part file
+    # per core per language, not one per initial shuffle partition.
+    lang_dirs = [d for d in os.listdir(out) if d.startswith("lang=")]
+    n_files = sum(
+        f.startswith("part-") and f.endswith(".parquet")
+        for d in lang_dirs
+        for f in os.listdir(os.path.join(out, d))
+    )
+    assert 0 < n_files <= spark.sparkContext.defaultParallelism * len(lang_dirs)
     # agrees with the oracle-checked capstone aggregate
     from k8s_log_etl_spark.queries.text import corpus_clean_pipeline
 
@@ -335,8 +378,11 @@ def test_cli_sql_mode(spark, capsys, monkeypatch):
 def test_cli_curate_incremental_state(spark, tmp_path, monkeypatch):
     """--state-path makes curation incremental: re-curating the same
     drop anti-joins every previously-kept canonical hash away up front,
-    so the rerun's 'seen_dropped' equals the first run's kept count and
-    nothing kept twice shares a hash with the state."""
+    so the rerun's 'seen_dropped' equals the first run's kept count.
+    The rerun is not empty: the state holds only survivors' hashes, so
+    a near-duplicate dropped in run 1 loses its kept partner to the
+    anti-join and survives in run 2. Its report must count exactly the
+    rows it wrote."""
     import json
 
     monkeypatch.setattr(cli, "get_spark", lambda **_kw: spark)
@@ -362,6 +408,51 @@ def test_cli_curate_incremental_state(spark, tmp_path, monkeypatch):
     r2 = json.load(open(rep2))
     assert r2["seen_dropped"] == r1["kept_docs"]
     assert r2["kept_docs"] < r1["kept_docs"]
+    assert r2["kept_docs"] == spark.read.parquet(out2).count()
+
+
+def test_cli_curate_warm_state_reports_written_rows(spark, tmp_path, monkeypatch):
+    """A warm --state-path run reports the survivors it wrote. Three
+    docs: A, B = A with two words substituted (new canonical hash,
+    trigram Jaccard 52/64 ≈ 0.81, so B is A's near-duplicate), and an
+    unrelated C. Run 1 keeps A and C; run 2 anti-joins them away and B
+    survives. The state append must not make the report re-derive its
+    survivors against the extended state (which would count 0)."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(cli, "get_spark", lambda **_kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    words_a = [f"alpha{i}" for i in range(60)]
+    words_b = list(words_a)
+    words_b[20], words_b[40] = "beta20", "beta40"
+    words_c = [f"gamma{i}" for i in range(30)]
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "en", " ".join(words_a)), (2, "en", " ".join(words_b)),
+         (3, "en", " ".join(words_c))],
+        "doc_id long, lang string, text string",
+    ).write.parquet(src)
+    state = str(tmp_path / "state")
+    out1, out2 = str(tmp_path / "out1"), str(tmp_path / "out2")
+    rep1, rep2 = str(tmp_path / "r1.json"), str(tmp_path / "r2.json")
+
+    for out, rep in ((out1, rep1), (out2, rep2)):
+        rc = cli.main(
+            ["--curate", "--input", src, "--output-path", out,
+             "--state-path", state, "--report-path", rep]
+        )
+        assert rc == 0
+    r1, r2 = json.load(open(rep1)), json.load(open(rep2))
+    assert r1["kept_docs"] == 2 and r1["seen_dropped"] == 0
+    assert r2["seen_dropped"] == 2
+
+    written = spark.read.parquet(out2)
+    assert r2["kept_docs"] == 1 == written.count()
+    assert [r["doc_id"] for r in written.collect()] == [2]
+    rows_by_lang = {
+        r["lang"]: r["n"] for r in written.groupBy("lang").agg(F.count("*").alias("n")).collect()
+    }
+    assert {k: v["n_docs"] for k, v in r2["by_lang"].items()} == rows_by_lang == {"en": 1}
 
 
 def test_cli_explain_mode(spark, capsys, monkeypatch):
