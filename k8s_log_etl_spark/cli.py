@@ -24,7 +24,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from k8s_log_etl_spark.config import PipelineConfig, load_config
+from k8s_log_etl_spark.config import OUTPUT_TYPES, PipelineConfig, load_config
 from k8s_log_etl_spark.operators import lognorm, report as R
 from k8s_log_etl_spark.session import get_spark
 from k8s_log_etl_spark.sinks import writers
@@ -40,9 +40,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--filter-levels", default=None, help="comma/semicolon list")
     p.add_argument("--filter-services", default=None)
     p.add_argument("--redact-keys", default=None)
-    p.add_argument("--output-type", default=None,
-                   choices=["stdout", "file", "rotate", "rotating", "http",
-                            "webhook", "parquet", "s3", "kafka"])
+    p.add_argument("--output-type", default=None, choices=OUTPUT_TYPES)
     p.add_argument("--output-path", "--output", default=None)
     p.add_argument("--http-url", default=None, help="sink URL for output-type http")
     p.add_argument("--dlq-path", "--dlq", default=None)
@@ -219,7 +217,7 @@ def run_batch(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSession
     attempts = _write_sink(args, cfg, written, spark)
     t2 = time.monotonic()
     # Counters were observed during the cache build — no extra pass;
-    # only the two labeled tallies run as (cache-served) jobs.
+    # only the level/service tallies run, as one (cache-served) group-by.
     rep = R.report_from_observation(obs, df)
     rep = R.merge_sink_stats(rep, attempts)
     t3 = time.monotonic()
@@ -239,14 +237,15 @@ def run_batch(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSession
     # (reference main.go:318-326 routes only write failures; we add the
     # corrupt-record routing Spark gives for free).
     if cfg.dlq_path:
-        bad = df.filter(~F.col("json_ok") | F.col("norm_error").isNotNull())
-        writers.dlq_records(
+        bad = df.filter(~lognorm.ok_predicate())
+        writers.write_dlq(
             bad.selectExpr(
                 "value",
                 "0 AS retries",
                 "CASE WHEN NOT json_ok THEN 'json parse failed' ELSE norm_error END AS error",
-            )
-        ).coalesce(1).write.mode("append").text(cfg.dlq_path)
+            ),
+            cfg.dlq_path,
+        )
         # `bad` is exactly the json-failed plus the normalize-failed
         # rows, both already counted by the observation: no count job.
         rep.dlq_written += rep.json_failed + rep.normalized_failed

@@ -26,6 +26,17 @@ import os
 from dataclasses import dataclass, fields, replace
 from typing import Any
 
+# Sink types (`output_type`, `--output-type`). The reference validator
+# (config.go:366) accepts only stdout/file/rotate, but its builder
+# (builder.go:15-55) dispatches http/webhook and carries s3/kafka as
+# NAMED placeholders (builder.go:46-51). Accept the builder's surface so
+# those names fail at sink-open with the reference's explicit "not yet
+# implemented" error (cli.py:_write_sink), not as an unknown type.
+OUTPUT_TYPES = (
+    "stdout", "file", "rotate", "rotating", "http", "webhook",
+    "parquet", "s3", "kafka",
+)
+
 
 @dataclass(frozen=True)
 class PipelineConfig:
@@ -46,8 +57,13 @@ class PipelineConfig:
     redact_keys: tuple[str, ...] = ("user_email", "token")
     # Transform chain names resolved via the plugin registry (config.go:26).
     transforms: tuple[str, ...] = ("filter_redact",)
-    # Worker pool (config.go:27-28). On Spark these size partitions /
-    # maxFilesPerTrigger rather than goroutines.
+    # Worker pool (config.go:27-28), batching (config.go:35-36) and
+    # graceful drain (config.go:38): max_workers, queue_size, batch_size
+    # and shutdown_timeout_seconds are accepted (and validated) so that
+    # reference config files, env vars and command lines still load,
+    # but nothing reads them — Spark's partitions and micro-batches do
+    # that work. flush_interval_ms is only the streaming trigger
+    # interval (streaming/pipeline.py).
     max_workers: int = 4
     queue_size: int = 128
     # Sink retry/backoff (config.go:29-32).
@@ -55,10 +71,8 @@ class PipelineConfig:
     backoff_base_ms: int = 100
     backoff_max_ms: int = 2000
     jitter_pct: float = 0.2
-    # Batching (config.go:35-36).
     batch_size: int = 100
     flush_interval_ms: int = 1000
-    # Graceful drain (config.go:38).
     shutdown_timeout_seconds: int = 30
     # Structured logging (config.go:40-41).
     log_level: str = "info"
@@ -75,21 +89,10 @@ class PipelineConfig:
     def validate(self) -> None:
         """Error-collecting validation mirroring reference config.go:362-451."""
         errs: list[str] = []
-        # reference config.go:366 validates only stdout/file/rotate,
-        # but builder.go:15-55 dispatches http/webhook and carries the
-        # s3/kafka NAMED placeholders (builder.go:46-51, reachable when
-        # the builder is called programmatically) — mirror the builder
-        # surface here so those names fail at sink-open with the
-        # reference's explicit "not yet implemented" error, not as an
-        # unknown type (cli.py:_write_sink)
-        valid_types = {
-            "stdout", "file", "rotate", "rotating", "http", "webhook",
-            "parquet", "s3", "kafka",
-        }
-        if self.output_type and self.output_type not in valid_types:
+        if self.output_type and self.output_type not in OUTPUT_TYPES:
             errs.append(
                 f"invalid output_type {self.output_type!r}: must be one of "
-                + ", ".join(sorted(valid_types))
+                + ", ".join(sorted(OUTPUT_TYPES))
             )
         if self.output_type in {"file", "rotate", "rotating", "parquet"} and not self.output_path:
             errs.append("output_path is required when output_type is file or rotate")

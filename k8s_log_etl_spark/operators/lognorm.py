@@ -2,8 +2,9 @@
 
 Re-expresses the reference pipeline — scan → JSON parse → normalize
 (alias coalesce + kubernetes flatten + residual-fields projection +
-validation) → level/service filter → PII redaction → report aggregation —
-as pure Spark Column expressions over a DataFrame of raw JSONL lines.
+validation) → level/service filter → PII redaction — as pure Spark
+Column expressions over a DataFrame of raw JSONL lines. The report
+counted over the result lives in operators/report.py.
 
 Parity sources (k8s-log-etl):
   * scan / blank-line skip ......... cmd/etl/main.go:340-359
@@ -11,7 +12,6 @@ Parity sources (k8s-log-etl):
   * Normalize ...................... internal/stages/normalize.go:11-190
   * timestamp validation ........... internal/stages/normalize.go:192-206
   * level/service filter + redact .. internal/stages/filter.go:29-86
-  * report counters ................ internal/report/report.go:14-38,71-102
 
 Semantics pinned exactly (these are what the DuckDB oracle checks):
   * alias fallback fires when the primary key is missing, non-string, or
@@ -315,8 +315,15 @@ def run_pipeline(lines: DataFrame, cfg: PipelineConfig | None = None) -> DataFra
     return plugins.apply_chain(df, cfg, cfg.transforms)
 
 
+def ok_predicate() -> Column:
+    """A row that parsed as a JSON object and normalized without error:
+    what the sinks receive (before filters) and the report counts as
+    `normalized_ok`; every other row goes to the DLQ."""
+    return F.col("json_ok") & F.col("norm_error").isNull()
+
+
 def ok_records(df: DataFrame) -> DataFrame:
-    return df.filter(F.col("json_ok") & F.col("norm_error").isNull())
+    return df.filter(ok_predicate())
 
 
 def written_records(df: DataFrame) -> DataFrame:
@@ -330,21 +337,3 @@ def rfc3339nano(col: Column) -> Column:
     frac = F.regexp_replace(F.date_format(col, ".SSSSSSSSS"), r"\.?0+$", "")
     return F.concat(base, frac, F.lit("Z"))
 
-
-def report_summary(df: DataFrame) -> DataFrame:
-    """Single-row counter aggregation (report.go:14-38). `written_ok`
-    assumes an all-writes-succeed batch sink; sink-level retry/DLQ
-    accounting lives in sinks/ (foreachBatch)."""
-    c = F.count
-    w = lambda cond: F.count(F.when(cond, 1))  # noqa: E731
-    ok = F.col("json_ok") & F.col("norm_error").isNull()
-    return df.agg(
-        c(F.lit(1)).alias("total_lines"),
-        w(F.col("json_ok")).alias("json_parsed"),
-        w(~F.col("json_ok")).alias("json_failed"),
-        w(ok).alias("normalized_ok"),
-        w(F.col("json_ok") & F.col("norm_error").isNotNull()).alias("normalized_failed"),
-        w(ok & F.col("drop_reason").isNull()).alias("written_ok"),
-        w(ok & (F.col("drop_reason") == "level")).alias("filtered_by_level"),
-        w(ok & (F.col("drop_reason") == "service")).alias("filtered_by_service"),
-    )

@@ -2,13 +2,14 @@
 / Prometheus renders (reference O9-O13, O15, O27, O28 —
 internal/report/report.go).
 
-The whole report is computed in ONE distributed pass: a single
-aggregation over the annotated pipeline DataFrame producing every
-scalar counter plus the level/service/filter-reason tallies as
-map-typed aggregates (map_from_entries over collected small group-bys
-would be a second pass; pivot-free conditional counting keeps it one).
-Derived rates (throughput, error rates — report.go:167-185) are
-driver-side arithmetic on the collected single row.
+What the report counts is defined here once. The 8 scalar counters
+(`counter_columns`) are observed while the sink action (or the cache
+build) runs, so they cost no pass of their own; `report_summary` is
+the same columns as a plain aggregation. The level/service tallies
+are one (level, service) group-by and the sink stats one group-by on
+the attempt's error, each folded on the driver. Derived rates
+(throughput, error rates — report.go:167-185) are driver-side
+arithmetic.
 """
 
 from __future__ import annotations
@@ -16,8 +17,10 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from k8s_log_etl_spark.operators import lognorm
 
 
 @dataclass
@@ -152,6 +155,31 @@ class RunReport:
         return "\n".join(lines) + "\n"
 
 
+def counter_columns() -> list[Column]:
+    """The report's 8 scalar counters as aliased aggregate columns
+    (reference report.go:14-38). A function, not a constant: building a
+    Column needs an active session. `written_ok` assumes every write
+    succeeds; `merge_sink_stats` moves sink failures out of it."""
+    ok = lognorm.ok_predicate()
+    n = lambda cond: F.count(F.when(cond, 1))  # noqa: E731
+    return [
+        F.count(F.lit(1)).alias("total_lines"),
+        n(F.col("json_ok")).alias("json_parsed"),
+        n(~F.col("json_ok")).alias("json_failed"),
+        n(ok).alias("normalized_ok"),
+        n(F.col("json_ok") & ~ok).alias("normalized_failed"),
+        n(ok & F.col("drop_reason").isNull()).alias("written_ok"),
+        n(ok & (F.col("drop_reason") == "level")).alias("filtered_by_level"),
+        n(ok & (F.col("drop_reason") == "service")).alias("filtered_by_service"),
+    ]
+
+
+def report_summary(df: DataFrame) -> DataFrame:
+    """The counters as a single-row aggregation over the annotated
+    pipeline frame."""
+    return df.agg(*counter_columns())
+
+
 def attach_observation(df: DataFrame) -> tuple[DataFrame, "Observation"]:
     """Attach the scalar counters as an Observation (CollectMetrics):
     they ride along whatever action the sink runs — the counters cost
@@ -159,134 +187,70 @@ def attach_observation(df: DataFrame) -> tuple[DataFrame, "Observation"]:
     run metadata). Attach below any filters so all rows are observed."""
     from pyspark.sql import Observation
 
-    ok = F.col("json_ok") & F.col("norm_error").isNull()
     obs = Observation("etl_report")
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("total_lines"),
-        F.count(F.when(F.col("json_ok"), 1)).alias("json_parsed"),
-        F.count(F.when(~F.col("json_ok"), 1)).alias("json_failed"),
-        F.count(F.when(ok, 1)).alias("normalized_ok"),
-        F.count(F.when(F.col("json_ok") & F.col("norm_error").isNotNull(), 1)).alias(
-            "normalized_failed"
-        ),
-        F.count(F.when(ok & F.col("drop_reason").isNull(), 1)).alias("written_ok"),
-        F.count(F.when(ok & (F.col("drop_reason") == "level"), 1)).alias("filtered_level"),
-        F.count(F.when(ok & (F.col("drop_reason") == "service"), 1)).alias("filtered_service"),
-    )
-    return observed, obs
+    return df.observe(obs, *counter_columns()), obs
 
 
 def report_from_observation(obs: "Observation", df: DataFrame) -> RunReport:
-    """Build the report from observed counters (free) plus the two
-    labeled tallies (each one small group-by job)."""
+    """Build the report from observed counters (free) plus the
+    level/service tallies, folded from one (level, service) group-by
+    over the ok rows."""
     row = obs.get
-    ok = F.col("json_ok") & F.col("norm_error").isNull()
-    by_level = {
-        r["level"]: r["cnt"]
-        for r in df.filter(ok).groupBy("level").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    by_service = {
-        r["service"]: r["cnt"]
-        for r in df.filter(ok & (F.col("service") != ""))
-        .groupBy("service")
+    by_level: dict[str, int] = {}
+    by_service: dict[str, int] = {}
+    tallies = (
+        lognorm.ok_records(df)
+        .groupBy("level", "service")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
+    )
+    for r in tallies:
+        by_level[r["level"]] = by_level.get(r["level"], 0) + r["cnt"]
+        if r["service"]:
+            by_service[r["service"]] = by_service.get(r["service"], 0) + r["cnt"]
+    filtered = {
+        reason: row[f"filtered_by_{reason}"]
+        for reason in ("level", "service")
+        if row[f"filtered_by_{reason}"]
     }
-    rep = RunReport(
+    return RunReport(
         total_lines=row["total_lines"],
         json_parsed=row["json_parsed"],
         json_failed=row["json_failed"],
         normalized_ok=row["normalized_ok"],
         normalized_failed=row["normalized_failed"],
         written_ok=row["written_ok"],
+        filtered=filtered,
         by_level=by_level,
         by_service=by_service,
     )
-    filtered = {}
-    if row["filtered_level"]:
-        filtered["level"] = row["filtered_level"]
-    if row["filtered_service"]:
-        filtered["service"] = row["filtered_service"]
-    rep.filtered = filtered
-    return rep
-
-
-def compute_report(df: DataFrame) -> RunReport:
-    """One aggregation job for the scalar counters + three tiny group-by
-    jobs for the labeled tallies (each a shuffle of at most
-    |distinct key| rows; at 100 TB these are the cheap parts — the scan
-    is shared work Spark repeats per action, so callers wanting a
-    single-pass report should cache/checkpoint `df` first or rely on
-    these four jobs reusing shuffle files)."""
-    ok = F.col("json_ok") & F.col("norm_error").isNull()
-    row = df.agg(
-        F.count(F.lit(1)).alias("total_lines"),
-        F.count(F.when(F.col("json_ok"), 1)).alias("json_parsed"),
-        F.count(F.when(~F.col("json_ok"), 1)).alias("json_failed"),
-        F.count(F.when(ok, 1)).alias("normalized_ok"),
-        F.count(F.when(F.col("json_ok") & F.col("norm_error").isNotNull(), 1)).alias(
-            "normalized_failed"
-        ),
-        F.count(F.when(ok & F.col("drop_reason").isNull(), 1)).alias("written_ok"),
-        F.count(F.when(ok & (F.col("drop_reason") == "level"), 1)).alias("filtered_level"),
-        F.count(F.when(ok & (F.col("drop_reason") == "service"), 1)).alias("filtered_service"),
-    ).collect()[0]
-
-    by_level = {
-        r["level"]: r["cnt"]
-        for r in df.filter(ok).groupBy("level").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    by_service = {
-        r["service"]: r["cnt"]
-        for r in df.filter(ok & (F.col("service") != ""))
-        .groupBy("service")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-
-    rep = RunReport(
-        total_lines=row["total_lines"],
-        json_parsed=row["json_parsed"],
-        json_failed=row["json_failed"],
-        normalized_ok=row["normalized_ok"],
-        normalized_failed=row["normalized_failed"],
-        written_ok=row["written_ok"],
-        by_level=by_level,
-        by_service=by_service,
-    )
-    filtered = {}
-    if row["filtered_level"]:
-        filtered["level"] = row["filtered_level"]
-    if row["filtered_service"]:
-        filtered["service"] = row["filtered_service"]
-    rep.filtered = filtered
-    return rep
 
 
 def merge_sink_stats(rep: RunReport, attempts: DataFrame | None) -> RunReport:
     """Fold sink attempt results (sinks.writers.post_records) into the
-    report: write failures, DLQ counts/reasons, retry stats (O12, O15)."""
+    report: write failures, DLQ counts/reasons, retry stats (O12, O15 —
+    report.go:137-147). One group-by on `error`; the groups (one for
+    successes plus one per distinct failure reason) fold on the
+    driver."""
     if attempts is None:
         return rep
-    row = attempts.agg(
-        F.count(F.when(F.col("error").isNotNull(), 1)).alias("write_failed"),
-        F.sum("retries").alias("total_retries"),
-        F.count(F.when(F.col("retries") > 0, 1)).alias("writes_with_retries"),
-        F.max("retries").alias("max_retries_per_write"),
-    ).collect()[0]
-    reasons = {
-        r["error"]: r["cnt"]
-        for r in attempts.filter(F.col("error").isNotNull())
-        .groupBy("error")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    groups = (
+        attempts.groupBy("error")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("retries").alias("retries"),
+            F.count(F.when(F.col("retries") > 0, 1)).alias("with_retries"),
+            F.max("retries").alias("max_retries"),
+        )
         .collect()
-    }
-    rep.write_failed = row["write_failed"]
-    rep.written_ok -= row["write_failed"]
-    rep.dlq_written = row["write_failed"]
+    )
+    reasons = {g["error"]: g["cnt"] for g in groups if g["error"] is not None}
+    failed = sum(reasons.values())
+    rep.write_failed = failed
+    rep.written_ok -= failed
+    rep.dlq_written = failed
     rep.dlq_reasons = reasons
-    rep.total_retries = row["total_retries"] or 0
-    rep.writes_with_retries = row["writes_with_retries"] or 0
-    rep.max_retries_per_write = row["max_retries_per_write"] or 0
+    rep.total_retries = sum(g["retries"] or 0 for g in groups)
+    rep.writes_with_retries = sum(g["with_retries"] for g in groups)
+    rep.max_retries_per_write = max((g["max_retries"] or 0 for g in groups), default=0)
     return rep

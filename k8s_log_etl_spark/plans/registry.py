@@ -95,77 +95,6 @@ _CHECKED_FIRST_R14 = [
     "agg_countmin_events", "join_scd2_dimension", "events_gap_fill_locf",
 ]
 
-# Round 13 rotation (kept for the rotation log; superseded by
-# _CHECKED_FIRST_R14 above — PLANS.md round-13 lead #1, round-12
-# verdict #1/#2):
-# (a) round-13 modified implementations, (b) the two never-driver-
-# checked sketch queries as rows-only slots (retiring
-# agg_approx_events' stale r2 `no_oracle` artifact and giving
-# agg_heavyhitters_events its first driver fingerprint — both remain
-# legitimately oracle-less, so the driver records the weaker
-# rows-only check), (c) the COMPLETE 17-row r7-latest cohort — the
-# stalest greens on the books, (d) family-representative slots for
-# capabilities with no organic tranche member, pointed at their
-# STALEST remaining greens so the rep slot doubles as a refresh, and
-# (e) 20 slots reaching into the 36-row r8 cohort (capability
-# spread; the 16 r8 rows left over lead round 14's tranche).
-# Everything rotated out keeps its r8-r12 green row, is unchanged
-# since, and stays continuously covered by the full-surface pytest
-# oracle run (tests/test_oracle_parity.py runs every oracled query
-# every time).
-_CHECKED_FIRST_R13 = [
-    # --- (a) round-13 modified implementations: the BM25 builder's
-    # publish is now re-checked-and-retried after the lost-race
-    # fallback (round-12 ADVICE — both serve faces share
-    # _bm25_index_build); the two brute all-pairs baselines gained
-    # the fail-fast size gate (round-12 verdict #3 — behavior at
-    # driver scale unchanged, but the input path now runs through
-    # the guard) ---
-    "bm25_index_serve", "bm25_index_delta_serve",
-    "dedup_simhash", "dedup_embedding_cosine",
-    # --- (b) rows-only slots for the oracle-less sketches (round-12
-    # verdict #2): Misra-Gries merge is partition-order-dependent and
-    # t-digest/HLL++ state is engine-specific, so no hash oracle can
-    # exist — both are bounds-tested against exact answers in
-    # tests/test_approx.py; the driver row pins rows/schema ---
-    "agg_approx_events", "agg_heavyhitters_events",
-    # --- (c) the r7-latest refresh tranche: all 17 rows whose newest
-    # green is round 7 — the complete cohort, one-for-one as PLANS.md
-    # round-13 lead #1 asks ---
-    "having_large_orders", "join_asof_last_purchase",
-    "multimodal_resize_stats", "q13_order_distribution",
-    "q3_top_unshipped", "q5_regional_revenue",
-    "sample_bernoulli_seeded", "sample_temperature_lang",
-    "scalar_subquery_outliers", "text_gopher_rules",
-    "text_langid_confusion", "text_token_bpeish", "text_token_stats",
-    "text_top_bigrams", "tfidf_top_terms", "window_running_total",
-    "window_topk_per_customer",
-    # --- (d) family representatives for capabilities with no organic
-    # tranche member this round, each pointed at the family's STALEST
-    # remaining green so the rep slot doubles as a refresh
-    # (tests/test_registry_order.py pins the mapping) ---
-    "knn_brute_cosine",        # knn (r9 — family's stalest)
-    "knn_ivfpq_adc",           # ann-index (r10 — family's stalest)
-    "ann_recall_eval",         # ann-eval (sole member)
-    "graph_triangle_count",    # graph (r9 — family's stalest)
-    "corpus_shard_rendezvous", # warehouse (r9 — family's stalest)
-    "training_mix_pipeline",   # capstone (r9 — family's stalest)
-    "stream_sliding_avg",      # streaming (r9 — family's stalest)
-    # --- (e) 20 slots into the 36-row r8 cohort (stalest-next after
-    # (c); picked for capability spread — log, contamination,
-    # tokenizers, near-dup lifecycle, events, classifier train, and
-    # dedup_prefix_filter_jaccard doubly so: it is also this round's
-    # median re-adjudication target) ---
-    "agg_filter_reason", "benchmark_contamination",
-    "bpe_encode_corpus", "contamination_spans", "corpus_quality_gate",
-    "corpus_source_overlap_neardup", "decontam_bloom_prescreen",
-    "decontam_filter_corpus", "dedup_cdc_chunks", "dedup_lines_corpus",
-    "dedup_minhash_lsh", "dedup_minhash_index_serve",
-    "dedup_prefix_filter_jaccard", "events_changepoint_cusum",
-    "events_dau_wau", "q7_volume_shipping", "quality_classifier_train",
-    "text_kneser_ney_lm", "unigram_tokenize_corpus",
-    "wordpiece_train_merges",
-]
 # agg_approx_events / agg_heavyhitters_events are sketch-only (no
 # oracle by construction — Misra-Gries merge is partition-order-
 # dependent; engine-specific t-digest/HLL++ state) and held ROWS-ONLY

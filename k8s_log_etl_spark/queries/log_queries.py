@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from k8s_log_etl_spark.config import PipelineConfig
 from k8s_log_etl_spark.fixtures import fixture_df, fixture_values_cte
-from k8s_log_etl_spark.operators import lognorm
+from k8s_log_etl_spark.operators import lognorm, report as R
 from k8s_log_etl_spark.oracles import log_oracle as O
 from k8s_log_etl_spark.plans.registry import register
 from k8s_log_etl_spark.tables import load_table
@@ -76,7 +76,7 @@ def normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def normalize_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O3: residual-fields projection, pre-redaction (normalize.go:151-172)."""
     df = lognorm.normalize(lognorm.parse_json(lognorm.scan_lines(fixture_df(spark))))
-    df = df.filter(F.col("json_ok") & F.col("norm_error").isNull())
+    df = lognorm.ok_records(df)
     return df.select("line_id", F.explode("fields").alias("key", "val"))
 
 
@@ -142,7 +142,7 @@ def agg_filter_reason(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("report_summary", oracle=O.report_summary_sql(FIXTURE_RAW))
 def report_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O13+O27: scalar counters (report.go:14-38)."""
-    return lognorm.report_summary(_fixture_pipeline(spark))
+    return R.report_summary(_fixture_pipeline(spark))
 
 
 # ---------------------------------------------------------------------------
@@ -239,4 +239,4 @@ def pipeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_events_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O13 at scale: one-pass counter aggregation over the full pipeline."""
     df = lognorm.run_pipeline(events_lines(spark, sf_dir), CFG_EVENTS)
-    return lognorm.report_summary(df)
+    return R.report_summary(df)

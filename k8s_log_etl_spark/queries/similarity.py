@@ -667,19 +667,23 @@ FROM {final} GROUP BY k
 """
 
 
-def _sqdist_fold(vec: F.Column, cvec: list[float]) -> F.Column:
-    """Sequential squared distance to a literal centroid — round-13
+def _sqdist_fold(vec: str, cvec: list[float], offset: int = 0) -> F.Column:
+    """Sequential squared distance from elements offset, offset+1, ...
+    of the array column named `vec` (as doubles) to a literal centroid,
     UNROLLED over the (fixed, known) centroid length instead of the
-    zip_with/aggregate fold, which evaluated interpreted per row
-    (guide §4.1). The Python loop builds the identical left-associated
-    sum ((0.0 + t0) + t1)... over the identical per-element doubles
-    ((x_i - c_i)^2), so distances are bit-identical to _sqdist_sql;
-    `vec` may be any array expression (e.g. a PQ subvector slice)."""
-    acc: F.Column = F.lit(0.0)
+    zip_with/aggregate fold, which evaluated interpreted per row. The
+    left-associated sum ((0.0 + t0) + t1)... over the
+    identical per-element doubles ((x_i - c_i)^2) makes distances
+    bit-identical to _sqdist_sql; `offset` selects a PQ subvector.
+    Emitted as ONE SQL string (like xengine.dot_fixed_sql): built from
+    Column objects it cost ~7 py4j calls per term — 15-30 s of driver
+    wall per IVF-PQ or k-center plan at any data size."""
+    terms = []
     for i, c in enumerate(cvec):
-        x = F.get(vec, i).cast("double")
-        acc = acc + (x - F.lit(float(c))) * (x - F.lit(float(c)))
-    return acc
+        x = f"CAST(get({vec}, {offset + i}) AS DOUBLE)"
+        lit = f"({float(c)!r}D)"
+        terms.append(f"({x} - {lit}) * ({x} - {lit})")
+    return F.expr(" + ".join(["0.0D", *terms]))
 
 
 def _kmeans_assign(e: DataFrame, centroids: dict[int, list[float]]) -> DataFrame:
@@ -870,14 +874,6 @@ FROM a{m}_{PQ_ITERS} GROUP BY k"""
         for m in range(PQ_M)
     ]
     return "WITH " + ",\n".join(_pq_sql_parts()) + "\n" + "\nUNION ALL\n".join(finals)
-
-
-def _pq_subvec(m: int) -> F.Column:
-    return F.slice(
-        F.transform("embedding", lambda x: x.cast("double")),
-        m * PQ_SUBDIM + 1,
-        PQ_SUBDIM,
-    )
 
 
 def _pq_assign(e: DataFrame, cents: dict[int, dict[int, list[float]]]) -> DataFrame:
@@ -1293,11 +1289,10 @@ def _ivfpq_scored_frames(
     index = cells.join(codes, "vec_id")
 
     q = e.filter(F.col("vec_id") < N_QUERIES)
-    emb_d = F.transform("embedding", lambda x: x.cast("double"))
     probe_structs = F.array(
         *[
             F.struct(
-                _sqdist_fold(emb_d, coarse_cents[k]).alias("d"),
+                _sqdist_fold("embedding", coarse_cents[k]).alias("d"),
                 F.lit(k).alias("cell"),
             )
             for k in sorted(coarse_cents)
@@ -1305,7 +1300,10 @@ def _ivfpq_scored_frames(
     )
     qd_arrays = [
         F.array(
-            *[_sqdist_fold(_pq_subvec(m), pq_cents[m][k]) for k in sorted(pq_cents[m])]
+            *[
+                _sqdist_fold("embedding", pq_cents[m][k], m * PQ_SUBDIM)
+                for k in sorted(pq_cents[m])
+            ]
         ).alias(f"qd{m}")
         for m in range(PQ_M)
     ]
@@ -1651,12 +1649,12 @@ def select_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in range(1, KC_K + 1):
         dq = F.least(
             *[
-                F.round(_sqdist_fold(F.col("embedding"), c) * DIST_QUANT)
+                F.round(_sqdist_fold("embedding", c) * DIST_QUANT)
                 .cast("bigint")
                 for c in centers
             ]
         ) if len(centers) > 1 else F.round(
-            _sqdist_fold(F.col("embedding"), centers[0]) * DIST_QUANT
+            _sqdist_fold("embedding", centers[0]) * DIST_QUANT
         ).cast("bigint")
         top = (
             e.select("vec_id", "embedding", dq.alias("dq"))

@@ -64,14 +64,10 @@ def render_jsonl(df: DataFrame) -> DataFrame:
     )
 
 
-def write_jsonl_file(df: DataFrame, path: str, single_file: bool = True) -> None:
-    """O17: file JSONL sink. single_file=True gives the reference's
-    one-output-file behavior via coalesce(1); False keeps one file per
-    partition (the scale default)."""
-    out = render_jsonl(df)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)
+def write_jsonl_file(df: DataFrame, path: str) -> None:
+    """O17: file JSONL sink — the reference's one output file, via
+    coalesce(1)."""
+    render_jsonl(df).coalesce(1).write.mode("overwrite").text(path)
 
 
 # ---------------------------------------------------------------------------
@@ -196,8 +192,8 @@ def post_records(
     the worker pool (O24) without the bounded queue, since micro-batch
     sizing already bounds in-flight work.
 
-    Downstream: `attempts.filter(error is not null)` → DLQ (O22);
-    `agg(sum(retries), …)` → retry stats (O15).
+    Downstream: `write_dlq` → DLQ (O22); `report.merge_sink_stats` →
+    write failures and retry stats (O15).
     """
 
     def run(batches: Iterator) -> Iterator:
@@ -237,16 +233,6 @@ def dlq_records(attempts: DataFrame) -> DataFrame:
         go_json_case(F.to_json(
             F.struct(F.col("value").alias("record"), F.col("error").alias("reason"))
         )).alias("value")
-    )
-
-
-def retry_stats(attempts: DataFrame) -> DataFrame:
-    """O15: TotalRetries / WritesWithRetries / MaxRetriesPerWrite
-    (report.go:137-147)."""
-    return attempts.agg(
-        F.sum("retries").alias("total_retries"),
-        F.count(F.when(F.col("retries") > 0, 1)).alias("writes_with_retries"),
-        F.max("retries").alias("max_retries_per_write"),
     )
 
 

@@ -159,7 +159,9 @@ def test_report_rates(spark):
         ),
         PipelineConfig(),
     )
-    rep = R.compute_report(df)
+    observed, obs = R.attach_observation(df)
+    observed.write.format("noop").mode("overwrite").save()
+    rep = R.report_from_observation(obs, df)
     assert rep.total_lines == 8
     assert rep.json_failed == 1
     assert rep.normalized_failed == 1

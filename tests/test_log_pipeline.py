@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from k8s_log_etl_spark.config import PipelineConfig
 from k8s_log_etl_spark.fixtures import fixture_df
-from k8s_log_etl_spark.operators import lognorm
+from k8s_log_etl_spark.operators import lognorm, report as R
 
 
 def _pipeline_rows(spark, cfg=None):
@@ -108,7 +108,7 @@ def test_service_filter_case_insensitive(spark):
 
 
 def test_golden_report_counts(spark):
-    row = lognorm.report_summary(
+    row = R.report_summary(
         lognorm.run_pipeline(fixture_df(spark), PipelineConfig())
     ).collect()[0]
     assert row["total_lines"] == 20          # 22 lines - 2 blank

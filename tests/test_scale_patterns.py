@@ -3,12 +3,15 @@ shuffle-freedom, observe()-based zero-pass report counters."""
 
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
 
 from k8s_log_etl_spark.config import PipelineConfig
 from k8s_log_etl_spark.fixtures import fixture_df
 from k8s_log_etl_spark.functions.skew import salted_join
 from k8s_log_etl_spark.operators import bucketing, lognorm, report as R
+from k8s_log_etl_spark.oracles import log_oracle as O
+from k8s_log_etl_spark.queries.log_queries import FIXTURE_RAW
 from k8s_log_etl_spark.tables import load_table
 
 
@@ -51,14 +54,29 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
 
 
 def test_observation_counters_match_compute_report(spark):
+    """The observed report (counters + folded level/service tallies)
+    equals the DuckDB reference over the same fixture."""
     df = lognorm.run_pipeline(fixture_df(spark), PipelineConfig())
     observed, obs = R.attach_observation(df)
     # the "sink action": a full consume
     observed.write.format("noop").mode("overwrite").save()
-    rep_obs = R.report_from_observation(obs, df)
-    rep_direct = R.compute_report(df)
-    assert rep_obs.to_dict() == rep_direct.to_dict()
-    assert rep_obs.total_lines > 0
+    rep = R.report_from_observation(obs, df)
+
+    con = duckdb.connect()
+    cur = con.execute(O.report_summary_sql(FIXTURE_RAW))
+    summary = dict(zip([d[0] for d in cur.description], cur.fetchone()))
+    by_level = dict(con.execute(O.agg_by_level_sql(FIXTURE_RAW)).fetchall())
+    by_service = dict(con.execute(O.agg_by_service_sql(FIXTURE_RAW)).fetchall())
+    con.close()
+
+    for key in ("total_lines", "json_parsed", "json_failed", "normalized_ok",
+                "normalized_failed", "written_ok"):
+        assert getattr(rep, key) == summary[key], key
+    assert rep.filtered.get("level", 0) == summary["filtered_by_level"]
+    assert rep.filtered.get("service", 0) == summary["filtered_by_service"]
+    assert rep.by_level == by_level
+    assert rep.by_service == by_service
+    assert rep.total_lines > 0 and len(rep.by_level) > 1
 
 
 def test_pack_chunks_distributed_equals_single_window(spark, sf_dir):

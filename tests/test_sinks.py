@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from k8s_log_etl_spark.config import PipelineConfig
 from k8s_log_etl_spark.fixtures import fixture_df
-from k8s_log_etl_spark.operators import lognorm
+from k8s_log_etl_spark.operators import lognorm, report as R
 from k8s_log_etl_spark.sinks import writers
 
 
@@ -39,7 +39,7 @@ def test_render_jsonl_reference_keys(written):
 
 def test_write_jsonl_single_file(written, tmp_path):
     out = str(tmp_path / "out")
-    writers.write_jsonl_file(written, out, single_file=True)
+    writers.write_jsonl_file(written, out)
     parts = [p for p in os.listdir(out) if p.startswith("part-")]
     assert len(parts) == 1
     lines = open(os.path.join(out, parts[0])).read().splitlines()
@@ -133,11 +133,12 @@ def test_http_sink_retry_and_dlq(spark, http_url, tmp_path):
     policy = writers.RetryPolicy(max_retries=2, backoff_base_ms=1, backoff_max_ms=2, jitter_pct=0.0)
     attempts = writers.post_records(rendered, http_url, policy).cache()
 
-    stats = writers.retry_stats(attempts).collect()[0]
+    rep = R.merge_sink_stats(R.RunReport(written_ok=3), attempts)
     # ok records each needed 1 retry (first attempt 503); poison exhausted 2
-    assert stats["writes_with_retries"] == 3
-    assert stats["max_retries_per_write"] == 2
-    assert stats["total_retries"] == 4
+    assert rep.writes_with_retries == 3
+    assert rep.max_retries_per_write == 2
+    assert rep.total_retries == 4
+    assert (rep.written_ok, rep.write_failed, rep.dlq_written) == (2, 1, 1)
 
     dlq_dir = str(tmp_path / "dlq")
     writers.write_dlq(attempts, dlq_dir)
@@ -157,6 +158,28 @@ def test_retry_stats_no_failures(spark):
     attempts = spark.createDataFrame(
         [("a", 0, None), ("b", 0, None)], writers.ATTEMPT_SCHEMA
     )
-    stats = writers.retry_stats(attempts).collect()[0]
-    assert (stats["total_retries"], stats["writes_with_retries"]) == (0, 0)
+    rep = R.merge_sink_stats(R.RunReport(written_ok=2), attempts)
+    assert (rep.total_retries, rep.writes_with_retries, rep.max_retries_per_write) == (0, 0, 0)
+    assert (rep.written_ok, rep.write_failed, rep.dlq_written, rep.dlq_reasons) == (2, 0, 0, {})
     assert writers.dlq_records(attempts).count() == 0
+
+
+def test_merge_sink_stats_folds_mixed_attempts(spark):
+    """Successes with and without retries plus failures under two
+    reasons: failures leave written_ok for the DLQ, tallied per reason;
+    retry stats span every attempt."""
+    attempts = spark.createDataFrame(
+        [
+            ("a", 0, None), ("b", 1, None), ("c", 2, None),
+            ("d", 3, "status 503"), ("e", 3, "status 503"), ("f", 0, "bad url"),
+        ],
+        writers.ATTEMPT_SCHEMA,
+    )
+    rep = R.merge_sink_stats(R.RunReport(written_ok=6), attempts)
+    assert rep.write_failed == 3
+    assert rep.written_ok == 3
+    assert rep.dlq_written == 3
+    assert rep.dlq_reasons == {"status 503": 2, "bad url": 1}
+    assert rep.total_retries == 9
+    assert rep.writes_with_retries == 4
+    assert rep.max_retries_per_write == 3

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import time
 
 from k8s_log_etl_spark.streaming import stateful
 
@@ -50,7 +51,16 @@ def test_error_burst_alerts_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # An availableNow query over this operator never terminates: the
+    # processing-time timeout makes every no-data batch request another
+    # one. availableNow runs no-data batches only once every file is
+    # consumed, so stop after the first one commits.
+    deadline = time.monotonic() + 120
+    while time.monotonic() < deadline and not any(
+        p["numInputRows"] == 0 for p in q.recentProgress
+    ):
+        time.sleep(0.2)
+    q.stop()
 
     rows = spark.sql("SELECT * FROM burst_alerts").collect()
     got = sorted((r["user_id"], r["n_errors"]) for r in rows)
