@@ -3,7 +3,7 @@
 Re-expresses the reference pipeline — scan → JSON parse → normalize
 (alias coalesce + kubernetes flatten + residual-fields projection +
 validation) → level/service filter → PII redaction — as pure Spark
-Column expressions over a DataFrame of raw JSONL lines. The report
+expressions over a DataFrame of raw JSONL lines. The report
 counted over the result lives in operators/report.py.
 
 Parity sources (k8s-log-etl):
@@ -35,8 +35,15 @@ Semantics pinned exactly (these are what the DuckDB oracle checks):
   * by_level / by_service tallies run over all normalize-OK records
     BEFORE filtering (main.go:386-411).
 
-Everything is a built-in Column expression (whole-stage codegen, no
-Python on the hot path). The JSON document is parsed exactly ONCE per
+Everything is a built-in expression (whole-stage codegen where Spark
+has it, no Python on the hot path), written as SQL text and applied
+with `F.expr`: one py4j round trip per output column, where a
+Column-built projection costs ~7 per `F.*` call (~3,000 round trips
+and ~0.6 s of driver time for this lineage, warm). The helpers
+(`gotrim`, `go_json_case`, `rfc3339nano`, ...) take and return SQL
+text. Go's strings.TrimSpace is Spark's set trim, `btrim(x, set)`:
+it strips any code point of the set from both ends — no regex, no
+Java String round trip. The JSON document is parsed exactly ONCE per
 row — ``from_json`` into ``map<string, variant>``, which simultaneously
 (a) gates JSON-objectness (arrays/scalars/malformed → NULL map, Go's
 ``json.Unmarshal`` into map[string]any), (b) provides tiny per-key
@@ -88,20 +95,37 @@ ERR_MISSING_LEVEL = "missing level: expected level/severity"
 DOC_SCHEMA = "map<string, variant>"
 
 
-def _vstr(c: Column) -> Column:
+def sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal. Backslash and quote are
+    escaped; control and non-ASCII BMP characters become \\uXXXX escapes
+    so printed plans stay readable, one line per node."""
+    body = "".join(
+        "\\" + ch if ch in "\\'"
+        else f"\\u{ord(ch):04x}" if ch < " " or "\x7f" <= ch <= "\uffff"
+        else ch
+        for ch in s
+    )
+    return f"'{body}'"
+
+
+def _sql_list(values: tuple[str, ...]) -> str:
+    return ", ".join(sql_str(v) for v in values)
+
+
+def _vstr(c: str) -> str:
     """The variant's value when it is a JSON string, else NULL (mirrors
     Go's `v.(string)` type assertion)."""
-    return F.when(
-        F.schema_of_variant(c) == F.lit("STRING"),
-        F.try_variant_get(c, "$", "string"),
+    return (
+        f"CASE WHEN schema_of_variant({c}) = 'STRING' "
+        f"THEN try_variant_get({c}, '$', 'string') END"
     )
 
 
 # Go unicode.IsSpace's exact character set (strings.TrimSpace). Spark's
-# F.trim strips ONLY ASCII space — tab/newline/unicode-space padded
-# values would diverge from the reference (found by the normalize
-# property test). Built from codepoints; the literal-character class
-# works identically in Java regex (Spark) and RE2 (DuckDB oracle).
+# one-argument trim strips ONLY ASCII space — tab/newline/unicode-space
+# padded values would diverge from the reference (found by the normalize
+# property test). GO_SPACE_CLASS is the same set as a regex class for
+# the DuckDB oracle, which keeps its own regex trim.
 # NOTE: Python's default str.strip() also eats \x1c-\x1f, which Go does
 # NOT consider whitespace — use GO_SPACE_CHARS, never bare strip().
 _GO_SPACE_CODEPOINTS = (
@@ -111,46 +135,58 @@ _GO_SPACE_CODEPOINTS = (
 )
 GO_SPACE_CHARS = "".join(chr(c) for c in _GO_SPACE_CODEPOINTS)
 GO_SPACE_CLASS = "[" + GO_SPACE_CHARS + "]"
-_GO_TRIM_RE = f"^{GO_SPACE_CLASS}+|{GO_SPACE_CLASS}+$"
+_GO_SPACE_SQL = sql_str(GO_SPACE_CHARS)
 
 
-def gotrim(c: Column) -> Column:
-    """strings.TrimSpace parity (normalize.go:20 etc.)."""
-    return F.regexp_replace(c, _GO_TRIM_RE, "")
+def gotrim(c: str) -> str:
+    """strings.TrimSpace parity (normalize.go:20 etc.): the set trim
+    strips any code point of GO_SPACE_CHARS from both ends — no regex."""
+    return f"btrim({c}, {_GO_SPACE_SQL})"
 
 
 # Jackson (Spark's to_json) writes control-char escapes with UPPERCASE
-# hex (``); Go's encoding/json writes lowercase (``). Only
+# hex (`\u001F`); Go's encoding/json writes lowercase (`\u001f`). Only
 # nine escapes Jackson emits contain hex letters at all (\b \t \n \f \r
 # take short forms). A literal backslash in content is itself escaped as
 # `\\`, so after swapping `\\` for a raw \x01 — which cannot appear in
 # JSON output, Jackson escapes everything < 0x20 — every remaining
 # `\uXXXX` is a real escape and can be lowercased by literal replace.
+# Every escape rewritten contains `\u00`, so text without it is left as
+# is (and the `\\` round trip is then the identity): the passes are
+# skipped for it.
 _UPPER_HEX_ESCAPES = [0x0B, 0x0E, 0x0F, 0x1A, 0x1B, 0x1C, 0x1D, 0x1E, 0x1F]
+_ESCAPE_PREFIX = sql_str("\\u00")
 
 
-def go_json_case(c: Column) -> Column:
+def go_json_case(s: str) -> str:
     """Lowercase Jackson's \\uXXXX hex to match Go's encoding/json."""
-    out = F.replace(c, F.lit("\\\\"), F.lit("\x01"))
+    backslashes, marker = sql_str("\\\\"), sql_str("\x01")
+    out = f"replace({s}, {backslashes}, {marker})"
     for cp in _UPPER_HEX_ESCAPES:
-        out = F.replace(out, F.lit("\\u%04X" % cp), F.lit("\\u%04x" % cp))
-    return F.replace(out, F.lit("\x01"), F.lit("\\\\"))
+        upper, lower = sql_str("\\u%04X" % cp), sql_str("\\u%04x" % cp)
+        out = f"replace({out}, {upper}, {lower})"
+    out = f"replace({out}, {marker}, {backslashes})"
+    return f"CASE WHEN instr({s}, {_ESCAPE_PREFIX}) > 0 THEN {out} ELSE {s} END"
 
 
-def _nb(c: Column) -> Column:
+def _nb(c: str) -> str:
     """NULL when empty string (Go's `if s == ""` fallback trigger)."""
-    return F.nullif(c, F.lit(""))
+    return f"nullif({c}, '')"
 
 
-def _trimmed_chain(*cols: Column) -> Column:
+def _trimmed_chain(*cols: str) -> str:
     """First candidate that is non-empty after trim, else ''."""
-    return F.coalesce(*[_nb(gotrim(c)) for c in cols], F.lit(""))
+    return f"coalesce({', '.join(_nb(gotrim(c)) for c in cols)}, '')"
+
+
+def _exprs(cols: dict[str, str]) -> dict[str, Column]:
+    return {name: F.expr(sql) for name, sql in cols.items()}
 
 
 def scan_lines(df: DataFrame, value_col: str = "value") -> DataFrame:
     """Blank-line skip (main.go:354-356): blank lines are dropped before
     TotalLines is counted."""
-    return df.filter(F.length(gotrim(F.col(value_col))) > 0)
+    return df.filter(f"length({gotrim(f'`{value_col}`')}) > 0")
 
 
 def parse_json(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -158,8 +194,18 @@ def parse_json(df: DataFrame, value_col: str = "value") -> DataFrame:
     `json_ok`. A line parses only when it is a JSON *object* (Go
     unmarshals into map[string]any, main.go:365-374): from_json with a
     map target returns NULL for arrays, scalars, and malformed input."""
-    df = df.withColumn("m", F.from_json(F.col(value_col), DOC_SCHEMA))
-    return df.withColumn("json_ok", F.col("m").isNotNull())
+    df = df.withColumn("m", F.expr(f"from_json(`{value_col}`, {sql_str(DOC_SCHEMA)})"))
+    return df.withColumn("json_ok", F.expr("m IS NOT NULL"))
+
+
+_TOP_KEYS = {
+    "ts": "ts", "time": "time", "level": "level",
+    "severity": "severity", "msg": "msg", "message": "message",
+    "service": "service", "app": "app", "component": "component",
+    "ns": "namespace", "pod": "pod", "node": "node",
+    "hostname": "hostname", "trace_id": "trace_id", "trace": "trace",
+}
+_K8S_KEYS = {"ns": "namespace_name", "pod": "pod_name", "node": "node_name"}
 
 
 def normalize(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -173,105 +219,72 @@ def normalize(df: DataFrame, value_col: str = "value") -> DataFrame:
     # separate projection (CollapseProject won't inline non-cheap
     # producers into multiple references) so generated code stays small
     # enough for the JIT.
-    m = F.col("m")
-    k8s = F.element_at(m, F.lit("kubernetes"))
-    top = {
-        k: _vstr(F.element_at(m, F.lit(key)))
-        for k, key in {
-            "ts": "ts", "time": "time", "level": "level",
-            "severity": "severity", "msg": "msg", "message": "message",
-            "service": "service", "app": "app", "component": "component",
-            "ns": "namespace", "pod": "pod", "node": "node",
-            "hostname": "hostname", "trace_id": "trace_id", "trace": "trace",
-        }.items()
+    k8s = "element_at(m, 'kubernetes')"
+    raw = {
+        **{f"{k}_c": _vstr(f"element_at(m, {sql_str(key)})") for k, key in _TOP_KEYS.items()},
+        **{
+            f"k8s_{k}_c": _vstr(f"try_variant_get({k8s}, {sql_str('$.' + sub)}, 'variant')")
+            for k, sub in _K8S_KEYS.items()
+        },
     }
-    k8s_sub = {
-        f"k8s_{k}": _vstr(F.try_variant_get(k8s, f"$.{sub}", "variant"))
-        for k, sub in {"ns": "namespace_name", "pod": "pod_name", "node": "node_name"}.items()
-    }
-    df = df.withColumns({f"{k}_c": v for k, v in {**top, **k8s_sub}.items()})
-
-    c = F.col
-    df = df.withColumns(
-        {
-            "ts_str": _trimmed_chain(c("ts_c"), c("time_c")),
-            "level_raw": _trimmed_chain(c("level_c"), c("severity_c")),
-            "message": _trimmed_chain(c("msg_c"), c("message_c")),
-            "service": _trimmed_chain(c("service_c"), c("app_c"), c("component_c")),
-            # Top-level namespace/pod override the kubernetes block
-            # (untrimmed, even when empty strings).
-            "namespace": F.coalesce(
-                F.when(c("ns_c").isNotNull(), c("ns_c")).otherwise(c("k8s_ns_c")),
-                F.lit(""),
-            ),
-            "pod": F.coalesce(
-                F.when(c("pod_c").isNotNull(), c("pod_c")).otherwise(c("k8s_pod_c")),
-                F.lit(""),
-            ),
-            # node: top-level (trimmed) overrides block (untrimmed);
-            # hostname (trimmed) is a final fallback when node is ''.
-            "node": F.coalesce(
-                _nb(
-                    F.when(c("node_c").isNotNull(), gotrim(c("node_c")))
-                    .otherwise(c("k8s_node_c"))
-                ),
-                _nb(gotrim(c("hostname_c"))),
-                F.lit(""),
-            ),
-            "trace_id": _trimmed_chain(c("trace_id_c"), c("trace_c")),
-        }
-    )
+    df = df.withColumns(_exprs(raw))
+    node = f"CASE WHEN node_c IS NOT NULL THEN {gotrim('node_c')} ELSE k8s_node_c END"
+    df = df.withColumns(_exprs({
+        "ts_str": _trimmed_chain("ts_c", "time_c"),
+        "level_raw": _trimmed_chain("level_c", "severity_c"),
+        "message": _trimmed_chain("msg_c", "message_c"),
+        "service": _trimmed_chain("service_c", "app_c", "component_c"),
+        # Top-level namespace/pod override the kubernetes block
+        # (untrimmed, even when empty strings).
+        "namespace": "coalesce(CASE WHEN ns_c IS NOT NULL THEN ns_c ELSE k8s_ns_c END, '')",
+        "pod": "coalesce(CASE WHEN pod_c IS NOT NULL THEN pod_c ELSE k8s_pod_c END, '')",
+        # node: top-level (trimmed) overrides block (untrimmed);
+        # hostname (trimmed) is a final fallback when node is ''.
+        "node": f"coalesce({_nb(node)}, {_nb(gotrim('hostname_c'))}, '')",
+        "trace_id": _trimmed_chain("trace_id_c", "trace_c"),
+    }))
 
     # RFC3339(Nano) validation: regexp gate (Go's layout is strict about
     # 'T' and the offset) then engine parse; canonical value kept as a
     # real TimestampType for downstream temporal operators.
-    ts_parsed = F.when(
-        F.col("ts_str").rlike(RFC3339_RE), F.try_to_timestamp(F.col("ts_str"))
+    df = df.withColumn(
+        "ts",
+        F.expr(f"CASE WHEN ts_str RLIKE {sql_str(RFC3339_RE)} THEN try_to_timestamp(ts_str) END"),
     )
-    df = df.withColumn("ts", ts_parsed)
 
     df = df.withColumn(
         "norm_error",
-        F.when(F.col("ts_str") == "", F.lit(ERR_MISSING_TS))
-        .when(
-            F.col("ts").isNull(),
+        F.expr(
+            f"CASE WHEN ts_str = '' THEN {sql_str(ERR_MISSING_TS)} "
             # normalize.go:203 fmt.Errorf("invalid timestamp %q: ...").
             # %q additionally backslash-escapes quotes/control chars in
             # the offending value; this concat embeds it literally —
             # identical for all well-formed-but-wrong timestamps, and
             # the oracle mirrors the literal form.
-            F.concat(
-                F.lit('invalid timestamp "'), F.col("ts_str"), F.lit('": expected RFC3339')
-            ),
-        )
-        .when(F.col("message") == "", F.lit(ERR_MISSING_MSG))
-        .when(F.col("level_raw") == "", F.lit(ERR_MISSING_LEVEL)),
-    ).withColumn("level", F.upper(F.col("level_raw")))
+            "WHEN ts IS NULL THEN "
+            """concat('invalid timestamp "', ts_str, '": expected RFC3339') """
+            f"WHEN message = '' THEN {sql_str(ERR_MISSING_MSG)} "
+            f"WHEN level_raw = '' THEN {sql_str(ERR_MISSING_LEVEL)} END"
+        ),
+    ).withColumn("level", F.expr("upper(level_raw)"))
 
     # Residual fields: every key outside the exclusion list; values
     # rendered as strings (JSON strings unquoted, nested objects/arrays
     # as compact JSON, JSON null as NULL). Reuses the shared document
     # map — no extra parse; map_filter preserves document key order.
-    def _render(v: Column) -> Column:
-        s = F.schema_of_variant(v)
-        return (
-            F.when(s == F.lit("STRING"), F.try_variant_get(v, "$", "string"))
-            .when(s == F.lit("VOID"), F.lit(None).cast("string"))
-            .otherwise(go_json_case(F.to_json(v)))
-        )
-
+    render = (
+        "CASE WHEN schema_of_variant(v) = 'STRING' THEN try_variant_get(v, '$', 'string') "
+        "WHEN schema_of_variant(v) = 'VOID' THEN CAST(NULL AS STRING) "
+        f"ELSE {go_json_case('to_json(v)')} END"
+    )
     df = df.withColumn(
         "fields",
-        F.transform_values(
-            F.map_filter(F.col("m"), lambda k, _: ~k.isin(*EXCLUDED_KEYS)),
-            lambda _, v: _render(v),
+        F.expr(
+            f"transform_values(map_filter(m, (k, v) -> NOT k IN ({_sql_list(EXCLUDED_KEYS)})), "
+            f"(k, v) -> {render})"
         ),
     )
-    return df.drop(*[f"{k}_c" for k in (
-        "ts", "time", "level", "severity", "msg", "message", "service",
-        "app", "component", "ns", "pod", "node", "hostname",
-        "trace_id", "trace", "k8s_ns", "k8s_pod", "k8s_node",
-    )])
+    return df.drop(*raw)
 
 
 def apply_filters(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -281,18 +294,23 @@ def apply_filters(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     levels = cfg.levels_upper
     services = cfg.services_lower
 
-    keep_level = F.lit(True) if not levels else F.upper(F.col("level")).isin(*levels)
-    keep_service = F.lit(True) if not services else F.lower(F.col("service")).isin(*services)
+    keep_level = "TRUE" if not levels else f"upper(level) IN ({_sql_list(levels)})"
+    keep_service = "TRUE" if not services else f"lower(service) IN ({_sql_list(services)})"
 
     df = df.withColumn(
         "drop_reason",
-        F.when(~keep_level, F.lit("level")).when(~keep_service, F.lit("service")),
+        F.expr(
+            f"CASE WHEN NOT ({keep_level}) THEN 'level' "
+            f"WHEN NOT ({keep_service}) THEN 'service' END"
+        ),
     )
     if cfg.redact_keys:
-        redacted = F.map_filter(F.col("fields"), lambda k, _: ~k.isin(*cfg.redact_keys))
         df = df.withColumn(
             "fields",
-            F.when(F.col("drop_reason").isNull(), redacted).otherwise(F.col("fields")),
+            F.expr(
+                "CASE WHEN drop_reason IS NULL THEN map_filter(fields, "
+                f"(k, v) -> NOT k IN ({_sql_list(cfg.redact_keys)})) ELSE fields END"
+            ),
         )
     return df
 
@@ -315,25 +333,28 @@ def run_pipeline(lines: DataFrame, cfg: PipelineConfig | None = None) -> DataFra
     return plugins.apply_chain(df, cfg, cfg.transforms)
 
 
-def ok_predicate() -> Column:
-    """A row that parsed as a JSON object and normalized without error:
-    what the sinks receive (before filters) and the report counts as
-    `normalized_ok`; every other row goes to the DLQ."""
-    return F.col("json_ok") & F.col("norm_error").isNull()
+#: A row that parsed as a JSON object and normalized without error:
+#: what the sinks receive (before filters) and the report counts as
+#: `normalized_ok`; every other row goes to the DLQ.
+OK_SQL = "json_ok AND norm_error IS NULL"
 
 
 def ok_records(df: DataFrame) -> DataFrame:
-    return df.filter(ok_predicate())
+    return df.filter(OK_SQL)
 
 
 def written_records(df: DataFrame) -> DataFrame:
-    return ok_records(df).filter(F.col("drop_reason").isNull())
+    return ok_records(df).filter("drop_reason IS NULL")
 
 
-def rfc3339nano(col: Column) -> Column:
+_RFC3339_SECONDS = sql_str("yyyy-MM-dd'T'HH:mm:ss")
+_TRAILING_ZEROS = sql_str(r"\.?0+$")
+
+
+def rfc3339nano(c: str) -> str:
     """Render a timestamp as Go time.RFC3339Nano (fractional zeros and a
     trailing '.' trimmed; UTC 'Z' suffix)."""
-    base = F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss")
-    frac = F.regexp_replace(F.date_format(col, ".SSSSSSSSS"), r"\.?0+$", "")
-    return F.concat(base, frac, F.lit("Z"))
-
+    return (
+        f"concat(date_format({c}, {_RFC3339_SECONDS}), "
+        f"regexp_replace(date_format({c}, '.SSSSSSSSS'), {_TRAILING_ZEROS}, ''), 'Z')"
+    )

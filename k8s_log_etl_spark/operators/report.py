@@ -160,17 +160,19 @@ def counter_columns() -> list[Column]:
     (reference report.go:14-38). A function, not a constant: building a
     Column needs an active session. `written_ok` assumes every write
     succeeds; `merge_sink_stats` moves sink failures out of it."""
-    ok = lognorm.ok_predicate()
-    n = lambda cond: F.count(F.when(cond, 1))  # noqa: E731
-    return [
-        F.count(F.lit(1)).alias("total_lines"),
-        n(F.col("json_ok")).alias("json_parsed"),
-        n(~F.col("json_ok")).alias("json_failed"),
-        n(ok).alias("normalized_ok"),
-        n(F.col("json_ok") & ~ok).alias("normalized_failed"),
-        n(ok & F.col("drop_reason").isNull()).alias("written_ok"),
-        n(ok & (F.col("drop_reason") == "level")).alias("filtered_by_level"),
-        n(ok & (F.col("drop_reason") == "service")).alias("filtered_by_service"),
+    ok = f"({lognorm.OK_SQL})"
+    counts = {
+        "json_parsed": "json_ok",
+        "json_failed": "NOT json_ok",
+        "normalized_ok": ok,
+        "normalized_failed": f"json_ok AND NOT {ok}",
+        "written_ok": f"{ok} AND drop_reason IS NULL",
+        "filtered_by_level": f"{ok} AND drop_reason = 'level'",
+        "filtered_by_service": f"{ok} AND drop_reason = 'service'",
+    }
+    return [F.expr("count(1) AS total_lines")] + [
+        F.expr(f"count(CASE WHEN {cond} THEN 1 END) AS {name}")
+        for name, cond in counts.items()
     ]
 
 

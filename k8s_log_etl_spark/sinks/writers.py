@@ -5,7 +5,7 @@ writers, micro-batching, bounded-queue workers, retry with exponential
 backoff + jitter, dead-letter queue — maps onto Spark as:
 
 * JSONL encode (O16, internal/sink/jsonl.go:16-38): `render_jsonl` —
-  a pure projection (`to_json(struct(...))`) with the reference's exact
+  a pure projection (`to_json(named_struct(...))`) with the reference's exact
   capitalized keys and RFC3339Nano timestamps; distributed, no Python.
 * file sink (O17, builder.go:19-27): native `df.write.text`; single-file
   parity via coalesce(1) (replaces the mutex'd single writer O25,
@@ -39,7 +39,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from k8s_log_etl_spark.config import PipelineConfig
-from k8s_log_etl_spark.operators.lognorm import go_json_case, rfc3339nano
+from k8s_log_etl_spark.operators.lognorm import go_json_case, rfc3339nano, sql_str
+
+
+_RECORD_FIELDS = {
+    "TS": rfc3339nano("ts"), "Level": "level", "Service": "service",
+    "Namespace": "namespace", "Pod": "pod", "Node": "node",
+    "Message": "message", "TraceID": "trace_id", "Fields": "fields",
+}
+
+
+def _json_text(fields: dict[str, str]) -> str:
+    """Go-cased `to_json` of a named struct (key -> SQL expression)."""
+    struct = ", ".join(f"{sql_str(k)}, {v}" for k, v in fields.items())
+    return go_json_case(f"to_json(named_struct({struct}))")
 
 
 def render_jsonl(df: DataFrame) -> DataFrame:
@@ -47,21 +60,7 @@ def render_jsonl(df: DataFrame) -> DataFrame:
     names (TS, Level, …, Fields — model.Normalized has no JSON tags,
     normalized.go:3-13), timestamps re-serialized RFC3339Nano
     (normalize.go:178)."""
-    return df.select(
-        go_json_case(F.to_json(
-            F.struct(
-                rfc3339nano(F.col("ts")).alias("TS"),
-                F.col("level").alias("Level"),
-                F.col("service").alias("Service"),
-                F.col("namespace").alias("Namespace"),
-                F.col("pod").alias("Pod"),
-                F.col("node").alias("Node"),
-                F.col("message").alias("Message"),
-                F.col("trace_id").alias("TraceID"),
-                F.col("fields").alias("Fields"),
-            )
-        )).alias("value")
-    )
+    return df.select(F.expr(_json_text(_RECORD_FIELDS)).alias("value"))
 
 
 def write_jsonl_file(df: DataFrame, path: str) -> None:
@@ -229,10 +228,8 @@ def post_records(
 def dlq_records(attempts: DataFrame) -> DataFrame:
     """O22: failed writes as {record, reason} JSONL rows
     (dlqRecord, cmd/etl/main.go:475-478)."""
-    return attempts.filter(F.col("error").isNotNull()).select(
-        go_json_case(F.to_json(
-            F.struct(F.col("value").alias("record"), F.col("error").alias("reason"))
-        )).alias("value")
+    return attempts.filter("error IS NOT NULL").select(
+        F.expr(_json_text({"record": "value", "reason": "error"})).alias("value")
     )
 
 

@@ -82,8 +82,10 @@ def test_cli_golden_run(spark, input_file, tmp_path, monkeypatch):
     # O14: every stage slot carries measured wall-clock (report.go
     # StageTimings — here at the engine's real action boundaries).
     timings = rep["stage_timings_ms"]
-    assert set(timings) == {"parse_normalize_filter", "write", "report"}
+    assert set(timings) == {"build", "parse_normalize_filter", "write", "report", "dlq"}
     assert all(v > 0 for v in timings.values())
+    # together they cover the whole run
+    assert sum(timings.values()) >= 0.9 * rep["duration_sec"] * 1000
     assert rep["throughput_lines_per_sec"] > 0
 
     prom = open(prom_path).read()

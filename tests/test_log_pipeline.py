@@ -4,12 +4,16 @@ golden 6-line integration invariant (integration_test.go:69-90)."""
 
 from __future__ import annotations
 
+import json
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
 from k8s_log_etl_spark.config import PipelineConfig
 from k8s_log_etl_spark.fixtures import fixture_df
 from k8s_log_etl_spark.operators import lognorm, report as R
+from k8s_log_etl_spark.sinks import writers
 
 
 def _pipeline_rows(spark, cfg=None):
@@ -125,11 +129,72 @@ def test_rfc3339nano_render(spark):
     df = spark.createDataFrame(
         [("2025-12-14T19:25:12.345Z",), ("2025-12-14T19:25:12Z",), ("2025-12-14T19:25:12.100200300Z",)],
         "s string",
-    ).select(lognorm.rfc3339nano(F.try_to_timestamp("s")).alias("out"))
+    ).select(F.expr(lognorm.rfc3339nano("try_to_timestamp(s)")).alias("out"))
     got = [r["out"] for r in df.collect()]
     # Spark timestamps are microsecond precision; Go renders nanos — parity
     # holds for the micro range the engine stores.
     assert got == ["2025-12-14T19:25:12.345Z", "2025-12-14T19:25:12Z", "2025-12-14T19:25:12.1002Z"]
+
+
+def test_gotrim_is_go_trimspace(spark):
+    r"""strings.TrimSpace exactly: every Go space code point is stripped
+    from either end, nothing else is — \x1c-\x1f (Python's bare strip()
+    eats them), ZWSP and BOM stay, and so do interior spaces."""
+    go = lognorm.GO_SPACE_CHARS
+    cases = [p for ch in go for p in (ch + "a b", "a b" + ch, ch + ch + "a b" + ch)]
+    cases += [k + "x" + k for k in "\x1c\x1d\x1e\x1f\u200b\ufeff"]
+    cases += ["\x1c", go + "\u200b" + go, go, "  in  side\u3000\u2028 "]
+    rows = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(cases)] + [(len(cases), None)], "i int, s string"
+    ).select("i", F.expr(lognorm.gotrim("s")).alias("t")).collect()
+    got = [r["t"] for r in sorted(rows, key=lambda r: r["i"])]
+    assert got == [c.strip(go) for c in cases] + [None]
+    assert got[-5:-1] == ["\x1c", "\u200b", "", "in  side"]
+
+    kept = lognorm.scan_lines(
+        spark.createDataFrame([(go,), ("\x1c",), ("\u3000\x85",), (" x ",)], "value string")
+    ).collect()
+    assert sorted(r["value"] for r in kept) == ["\x1c", " x "]
+
+
+def test_render_go_json_case(spark):
+    r"""A literal backslash + `u001F` stays as text while a real \x1f
+    renders as Go's lowercase `\u001f` — in a string field and inside a
+    nested object's compact JSON."""
+    value = "a\\u001Fb\x1fc"
+    line = json.dumps({"ts": "2025-01-01T00:00:00Z", "level": "ERROR", "msg": "m",
+                       "k": value, "n": {"s": value}})
+    df = lognorm.run_pipeline(spark.createDataFrame([(line,)], "value string"))
+    [got] = [r["value"] for r in writers.render_jsonl(lognorm.written_records(df)).collect()]
+    go = {"TS": "2025-01-01T00:00:00Z", "Level": "ERROR", "Service": "", "Namespace": "",
+          "Pod": "", "Node": "", "Message": "m", "TraceID": "",
+          "Fields": {"k": value, "n": json.dumps({"s": value}, separators=(",", ":"))}}
+    assert got == json.dumps(go, separators=(",", ":"), ensure_ascii=False)
+    assert '"k":"a\\\\u001Fb\\u001fc"' in got
+
+
+def test_lineage_build_py4j_commands(spark, monkeypatch):
+    """Building the lineage costs about one py4j command per SQL-text
+    column, not ~7 per `F.*` call: building the observed pipeline plus
+    its render sent 2,960 commands with Column-built projections and
+    sends 264 now; the bound is about twice that. Memory-delete commands
+    (the Python GC's) don't count."""
+    client = spark.sparkContext._gateway._gateway_client
+    lines = fixture_df(spark)
+    sent, me = [], threading.get_ident()
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        # other threads (a stream another test left running) don't count
+        if not command.startswith("m\nd\n") and threading.get_ident() == me:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    df, _ = R.attach_observation(lognorm.run_pipeline(lines, PipelineConfig()))
+    writers.render_jsonl(lognorm.written_records(df))
+    monkeypatch.undo()
+    assert len(sent) <= 550, len(sent)
 
 
 def test_gzip_jsonl_source(spark, tmp_path):

@@ -12,7 +12,8 @@ rendering concern, not a normalize-semantics concern.
 Bug found by this test in round 1: Spark's F.trim strips only ASCII
 space while Go's strings.TrimSpace strips the Unicode White_Space set
 (and Python's default str.strip() strips even more: \x1c-\x1f) — the
-engine now uses a Go-exact regexp trim shared with the oracle.
+engine now trims Go's exact space set with Spark's set trim (btrim),
+while the oracle keeps an independent regex trim over the same set.
 
 Bugs found in round 2: (a) node/hostname still used ASCII F.trim
 (missed branch of the round-1 fix); (b) Jackson renders control-char

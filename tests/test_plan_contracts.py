@@ -18,6 +18,9 @@ from __future__ import annotations
 
 import pytest
 
+from k8s_log_etl_spark.config import PipelineConfig
+from k8s_log_etl_spark.fixtures import fixture_df
+from k8s_log_etl_spark.operators import lognorm
 from k8s_log_etl_spark.plans.registry import load_all
 
 SPECS = load_all()
@@ -491,3 +494,11 @@ def test_q21_single_lineitem_scan(spark):
     assert plan.count("lineitem.parquet") == 1, (
         f"lineitem scanned {plan.count('lineitem.parquet')}x:\n{plan[:2000]}"
     )
+
+
+def test_log_pipeline_plans_no_regex_trim(spark):
+    """Go's TrimSpace is a set trim (`btrim`), not a Java-regex
+    `regexp_replace` over every raw line and canonical value."""
+    df = lognorm.run_pipeline(fixture_df(spark), PipelineConfig())
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "regexp_replace" not in plan, plan[:2000]
