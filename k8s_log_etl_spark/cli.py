@@ -24,7 +24,9 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from k8s_log_etl_spark.config import OUTPUT_TYPES, PipelineConfig, load_config
+from k8s_log_etl_spark.config import (
+    FIELD_TYPES, LOG_FORMATS, LOG_LEVELS, OUTPUT_TYPES, PipelineConfig, load_config,
+)
 from k8s_log_etl_spark.operators import lognorm, report as R
 from k8s_log_etl_spark.session import get_spark
 from k8s_log_etl_spark.sinks import writers
@@ -57,9 +59,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--rotate-max-bytes", "--output-max-bytes", type=int, default=None)
     p.add_argument("--rotate-max-files", "--output-max-files", type=int, default=None)
     p.add_argument("--shutdown-timeout-seconds", type=int, default=None)
-    p.add_argument("--log-level", default=None,
-                   choices=["debug", "info", "warn", "error"])
-    p.add_argument("--log-format", default=None, choices=["json", "text"])
+    p.add_argument("--log-level", default=None, choices=LOG_LEVELS)
+    p.add_argument("--log-format", default=None, choices=LOG_FORMATS)
     p.add_argument("--report-path", "--report", default=None, help="JSON report output")
     p.add_argument("--prometheus-path", default=None, help="Prometheus text output")
     p.add_argument("--stream", action="store_true", help="Structured Streaming over an input dir")
@@ -102,37 +103,21 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-_FLAG_TO_FIELD = {
+# Flags whose argparse dest differs from the config field they set. A
+# flag whose dest IS a field name sets that field without an entry here.
+_FLAG_RENAMES = {
     "input": "input_path",
-    "filter_levels": "filter_levels",
-    "filter_services": "filter_services",
-    "redact_keys": "redact_keys",
-    "output_type": "output_type",
-    "output_path": "output_path",
-    "dlq_path": "dlq_path",
-    "max_retries": "max_retries",
-    "backoff_base_ms": "backoff_base_ms",
-    "backoff_max_ms": "backoff_max_ms",
-    "jitter_pct": "jitter_pct",
-    "batch_size": "batch_size",
-    "flush_interval_ms": "flush_interval_ms",
-    "max_workers": "max_workers",
-    "queue_size": "queue_size",
-    "transforms": "transforms",
     "rotate_max_bytes": "output_max_bytes",
     "rotate_max_files": "output_max_files",
-    "shutdown_timeout_seconds": "shutdown_timeout_seconds",
-    "log_level": "log_level",
-    "log_format": "log_format",
 }
 
 
 def resolve_config(args: argparse.Namespace) -> PipelineConfig:
     overrides: dict[str, Any] = {}
-    for flag, fname in _FLAG_TO_FIELD.items():
-        value = getattr(args, flag)
-        if value is not None:
-            overrides[fname] = value
+    for dest, value in vars(args).items():
+        field = _FLAG_RENAMES.get(dest, dest)
+        if value is not None and field in FIELD_TYPES:
+            overrides[field] = value
     return load_config(path=args.config, overrides=overrides)
 
 
@@ -265,7 +250,7 @@ def run_batch(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSession
 def run_stream(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSession) -> None:
     from k8s_log_etl_spark.streaming import pipeline as SP
 
-    if not args.output_path and not cfg.output_path:
+    if not cfg.output_path:
         raise SystemExit("--output-path required in --stream mode")
     ckpt = args.checkpoint or (cfg.output_path.rstrip("/") + "_checkpoint")
     df = SP.stream_pipeline(spark, cfg.input_path, cfg)
@@ -303,6 +288,7 @@ def run_curate(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSessio
     against the extended state for the stats."""
     import os as _os
 
+    from k8s_log_etl_spark.functions.textops import canonical_hash, words
     from k8s_log_etl_spark.queries.text import corpus_survivors
     from k8s_log_etl_spark.tables import spill_checkpoint
 
@@ -312,13 +298,7 @@ def run_curate(args: argparse.Namespace, cfg: PipelineConfig, spark: SparkSessio
 
     n_seen_dropped = 0
     if args.state_path:
-        canon = F.concat_ws(
-            " ",
-            F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != ""
-            ),
-        )
-        docs = docs.withColumn("_h", F.md5(canon))
+        docs = docs.withColumn("_h", canonical_hash(words(F.col("text"))))
         if _os.path.isdir(args.state_path) and _os.listdir(args.state_path):
             seen = spark.read.parquet(args.state_path).select("h").distinct()
             before = docs.count()

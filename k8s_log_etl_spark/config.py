@@ -23,8 +23,8 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, fields, replace
-from typing import Any
+from dataclasses import dataclass, replace
+from typing import Any, get_type_hints
 
 # Sink types (`output_type`, `--output-type`). The reference validator
 # (config.go:366) accepts only stdout/file/rotate, but its builder
@@ -36,6 +36,16 @@ OUTPUT_TYPES = (
     "stdout", "file", "rotate", "rotating", "http", "webhook",
     "parquet", "s3", "kafka",
 )
+# Accepted `log_level`/`log_format` values (the reference's enums),
+# matched case-insensitively through `fold`.
+LOG_LEVELS = ("debug", "info", "warn", "error")
+LOG_FORMATS = ("json", "text")
+
+
+def fold(value: str, accepted: tuple[str, ...]) -> str | None:
+    """``value`` lower-cased if that is one of ``accepted``, else None."""
+    value = value.lower()
+    return value if value in accepted else None
 
 
 @dataclass(frozen=True)
@@ -63,7 +73,9 @@ class PipelineConfig:
     # reference config files, env vars and command lines still load,
     # but nothing reads them — Spark's partitions and micro-batches do
     # that work. flush_interval_ms is only the streaming trigger
-    # interval (streaming/pipeline.py).
+    # interval (streaming/pipeline.py). report_path is likewise unread
+    # when set from env or a config file: only the `--report-path` flag
+    # leads to a report being written, so a default run writes none.
     max_workers: int = 4
     queue_size: int = 128
     # Sink retry/backoff (config.go:29-32).
@@ -96,19 +108,8 @@ class PipelineConfig:
             )
         if self.output_type in {"file", "rotate", "rotating", "parquet"} and not self.output_path:
             errs.append("output_path is required when output_type is file or rotate")
-        for name in (
-            "max_workers",
-            "queue_size",
-            "max_retries",
-            "backoff_base_ms",
-            "backoff_max_ms",
-            "output_max_bytes",
-            "output_max_files",
-            "batch_size",
-            "flush_interval_ms",
-            "shutdown_timeout_seconds",
-        ):
-            if getattr(self, name) < 0:
+        for name, kind in FIELD_TYPES.items():
+            if kind is int and getattr(self, name) < 0:
                 errs.append(f"{name} cannot be negative: {getattr(self, name)}")
         if self.jitter_pct < 0:
             errs.append(f"jitter_pct cannot be negative: {self.jitter_pct:.2f}")
@@ -125,36 +126,24 @@ class PipelineConfig:
                 f"backoff_max_ms ({self.backoff_max_ms}) must be >= "
                 f"backoff_base_ms ({self.backoff_base_ms})"
             )
-        if self.log_level and self.log_level.lower() not in {"debug", "info", "warn", "error"}:
-            errs.append(
-                f"invalid log_level {self.log_level!r}: must be debug, info, warn, or error"
-            )
-        if self.log_format and self.log_format.lower() not in {"json", "text"}:
-            errs.append(f"invalid log_format {self.log_format!r}: must be json or text")
+        if fold(self.log_level, LOG_LEVELS) is None:
+            errs.append(f"invalid log_level {self.log_level!r}: must be one of {LOG_LEVELS}")
+        if fold(self.log_format, LOG_FORMATS) is None:
+            errs.append(f"invalid log_format {self.log_format!r}: must be one of {LOG_FORMATS}")
         if errs:
             raise ValueError(
                 "configuration validation failed:\n  - " + "\n  - ".join(errs)
             )
 
 
-_LIST_KEYS = {"filter_levels", "filter_services", "redact_keys", "transforms"}
-_INT_KEYS = {
-    "output_max_bytes",
-    "output_max_files",
-    "max_workers",
-    "queue_size",
-    "max_retries",
-    "backoff_base_ms",
-    "backoff_max_ms",
-    "batch_size",
-    "flush_interval_ms",
-    "shutdown_timeout_seconds",
-}
-_FLOAT_KEYS = {"jitter_pct"}
+# Each field's declared type: the one statement of how file, env and
+# flag values are coerced (`_coerce`) and which fields must not be
+# negative (`validate`, every int field).
+FIELD_TYPES = get_type_hints(PipelineConfig)
 
 # Reference JSON/YAML tags (config.go:17-41) → our field names, so the
 # reference repo's own config files load unchanged. Our field names are
-# accepted too (identity entries added below).
+# accepted too.
 _FILE_KEY_ALIASES = {
     "input": "input_path",
     "output": "output_path",
@@ -166,7 +155,6 @@ _FILE_KEY_ALIASES = {
     "sink_backoff_jitter_pct": "jitter_pct",
     "batch_flush_interval_ms": "flush_interval_ms",
 }
-_FIELD_NAMES = {f.name for f in fields(PipelineConfig)}
 
 # FromEnv surface (config.go:144-237) + this engine's legacy names.
 _ENV_MAP = {
@@ -207,34 +195,17 @@ def _split_list(raw: str) -> tuple[str, ...]:
     return tuple(items)
 
 
-def _coerce(key: str, value: Any) -> Any:
-    if key in _LIST_KEYS:
-        if isinstance(value, str):
-            return _split_list(value)
-        return tuple(str(v) for v in value)
-    if key in _INT_KEYS and not isinstance(value, bool):
-        return int(value)
-    if key in _FLOAT_KEYS:
-        return float(value)
-    return value
-
-
-def _env_coerce(field_name: str, raw: str) -> Any | None:
-    """Parse an env string; return None (keep base) on bad numerics,
-    mirroring the ignored strconv errors in FromEnv (config.go:156-227)."""
-    if field_name in _LIST_KEYS:
-        return _split_list(raw)
-    if field_name in _INT_KEYS:
-        try:
-            return int(raw)
-        except ValueError:
-            return None
-    if field_name in _FLOAT_KEYS:
-        try:
-            return float(raw)
-        except ValueError:
-            return None
-    return raw
+def _coerce(name: str, value: Any) -> Any:
+    """A file, env or flag value as field ``name``'s declared type.
+    Raises ValueError on a bad numeric."""
+    kind = FIELD_TYPES[name]
+    if kind in (int, float):
+        return value if isinstance(value, bool) else kind(value)
+    if kind is str:
+        return value
+    if isinstance(value, str):
+        return _split_list(value)
+    return tuple(str(v) for v in value)
 
 
 def _parse_scalar(val: str) -> Any:
@@ -304,7 +275,7 @@ def _load_file(path: str) -> dict[str, Any]:
     updates: dict[str, Any] = {}
     for key, value in data.items():
         field_name = _FILE_KEY_ALIASES.get(key, key)
-        if field_name not in _FIELD_NAMES:
+        if field_name not in FIELD_TYPES:
             continue  # unknown keys ignored, like Go's unmatched JSON tags
         updates[field_name] = _coerce(field_name, value)
     return updates
@@ -322,10 +293,11 @@ def load_config(
     env = dict(os.environ if env is None else env)
     env_updates: dict[str, Any] = {}
     for env_key, field_name in _ENV_MAP.items():
-        if env_key in env and env[env_key] != "":
-            parsed = _env_coerce(field_name, env[env_key])
-            if parsed is not None:
-                env_updates[field_name] = parsed
+        if env.get(env_key, ""):
+            try:
+                env_updates[field_name] = _coerce(field_name, env[env_key])
+            except ValueError:
+                pass  # FromEnv ignores strconv errors (config.go:156-227): keep the base
     if env_updates:
         cfg = replace(cfg, **env_updates)
     if overrides:

@@ -1,5 +1,5 @@
-"""Shared text/n-gram column helpers used by the dedup and text-analysis
-query modules."""
+"""Shared text/n-gram column helpers used by the engine (curation, stream
+ingest) and by the dedup and text-analysis query modules."""
 
 from __future__ import annotations
 
@@ -48,3 +48,17 @@ def ngram_indices(w: Column, n: int) -> Column:
     return F.when(F.size(w) >= n, F.sequence(F.lit(0), F.size(w) - n)).otherwise(
         F.array().cast("array<int>")
     )
+
+
+def words(text: Column) -> Column:
+    """Whitespace tokens of ``text``: ASCII-space trim, split on ``\\s+``,
+    empty tokens dropped."""
+    return F.filter(F.split(F.trim(text), r"\s+"), lambda x: x != "")
+
+
+def canonical_hash(w: Column) -> Column:
+    """The canonical document hash: md5 of the word array ``w`` (see
+    `words`) lower-cased and joined by single spaces. Exact dedup keeps
+    one document per hash, and ``--state-path`` tables and the stream
+    ingest index store it, so its value must never change."""
+    return F.md5(F.concat_ws(" ", F.transform(w, F.lower)))

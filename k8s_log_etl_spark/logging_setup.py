@@ -13,6 +13,8 @@ import logging
 import sys
 from datetime import datetime, timezone
 
+from k8s_log_etl_spark.config import LOG_FORMATS, LOG_LEVELS, fold
+
 
 class JsonFormatter(logging.Formatter):
     def format(self, record: logging.LogRecord) -> str:
@@ -31,15 +33,19 @@ class JsonFormatter(logging.Formatter):
 
 
 def setup_logging(level: str = "INFO", fmt: str = "json") -> logging.Logger:
-    """Configure the engine logger. fmt: 'json' or 'text'
-    (config.go log_level/log_format enums)."""
-    if fmt not in {"json", "text"}:
+    """Configure the engine logger. Accepts exactly the level and format
+    values the config validator accepts (`config.LOG_LEVELS`,
+    `config.LOG_FORMATS`, any case)."""
+    form = fold(fmt, LOG_FORMATS)
+    if form is None:
         raise ValueError(f"invalid log format {fmt!r}")
+    if fold(level, LOG_LEVELS) is None:
+        raise ValueError(f"invalid log level {level!r}")
     logger = logging.getLogger("k8s_log_etl_spark")
     logger.setLevel(level.upper())
     logger.handlers.clear()
     handler = logging.StreamHandler(sys.stderr)
-    if fmt == "json":
+    if form == "json":
         handler.setFormatter(JsonFormatter())
     else:
         handler.setFormatter(

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from k8s_log_etl_spark.functions import xengine as X
-from k8s_log_etl_spark.functions.textops import bind, ngram_indices
+from k8s_log_etl_spark.functions.textops import bind, canonical_hash, ngram_indices, words
 from k8s_log_etl_spark.plans.registry import register
 # Same hot-shingle guard as the standalone jaccard dedup: a shingle
 # shared by more docs than POSTING_CAP is dropped on both sides of the
@@ -34,7 +34,7 @@ FINGERPRINT_NGRAM = 4
 
 
 def _words(col: str = "text") -> F.Column:
-    return F.filter(F.split(F.trim(F.col(col)), r"\s+"), lambda x: x != "")
+    return words(F.col(col))
 
 
 _WORDS_SQL = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
@@ -343,7 +343,7 @@ def corpus_survivors(d: DataFrame, include_text: bool = True) -> DataFrame:
         d.select("doc_id", "lang", w.alias("w"))
         .withColumn("n_tokens", F.size("w"))
         .filter(F.col("n_tokens") >= MIN_TOKENS)
-        .withColumn("h", F.md5(F.concat_ws(" ", F.transform("w", F.lower))))
+        .withColumn("h", canonical_hash(F.col("w")))
         .transform(spill_checkpoint)  # word arrays: data-sized
     )
     exact_keep = (

@@ -36,21 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from k8s_log_etl_spark.functions.textops import canonical_hash, words
+
 MIN_TOKENS = 5      # quality gate: reject near-empty fragments
 MAX_TOKENS = 100_000
 
 
-def canonical_digest(text: F.Column) -> F.Column:
-    """md5 of the lowercased, whitespace-collapsed text — the same
-    canonicalization dedup_exact groups on."""
-    canon = F.concat_ws(
-        " ", F.filter(F.split(F.lower(F.trim(text)), r"\s+"), lambda x: x != "")
-    )
-    return F.md5(canon)
-
-
 def _gate(df: DataFrame) -> DataFrame:
-    n_tok = F.size(F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != ""))
+    n_tok = F.size(words(F.col("text")))
     return df.filter((n_tok >= MIN_TOKENS) & (n_tok <= MAX_TOKENS))
 
 
@@ -64,7 +57,7 @@ def ingest_batch(
     """Process one micro-batch (the foreachBatch body, callable
     directly for replay tests): gate → digest → in-batch dedup →
     corpus-index anti-join → batch-partitioned appends."""
-    digested = _gate(batch_df).withColumn("digest", canonical_digest(F.col("text")))
+    digested = _gate(batch_df).withColumn("digest", canonical_hash(words(F.col("text"))))
     # in-batch dedup: keeper = lowest doc_id per digest (min over a
     # doc_id-first struct compares lexicographically by field order,
     # so the whole surviving row is deterministic)

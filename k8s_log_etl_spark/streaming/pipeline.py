@@ -11,7 +11,10 @@ Reference mappings:
 * bounded queue backpressure (O24) → maxFilesPerTrigger micro-batch cap
 * batched sink flush (O20)         → trigger(processingTime=…)
 * graceful drain on signal (O26)   → stop_gracefully (processAllAvailable + stop)
-* sink retry / DLQ (O19/O22/O23)   → sinks.writers inside foreachBatch
+* sink retry / DLQ (O19/O22/O23)   → not yet: start_file_sink appends
+  each micro-batch's records inside foreachBatch with no DLQ, and
+  at-least-once — a micro-batch replayed after a crash between its
+  write and its checkpoint commit is appended again
 * event-time semantics the reference never had: withWatermark +
   tumbling windows over the normalized ts, late data dropped past the
   watermark; dropDuplicates within the watermark for exactly-once-ish
@@ -19,8 +22,6 @@ Reference mappings:
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,18 +50,17 @@ def start_file_sink(
     checkpoint_dir: str,
     cfg: PipelineConfig | None = None,
     trigger_once: bool = True,
-    batch_hook: Callable[[DataFrame, int], None] | None = None,
 ) -> StreamingQuery:
-    """Written records → JSONL files via foreachBatch (exactly-once per
-    micro-batch through the checkpoint). batch_hook is the test seam."""
+    """Written records → JSONL files via foreachBatch. The checkpoint
+    makes the source exactly-once, but the sink only at-least-once: each
+    micro-batch is appended, so one replayed after a crash between its
+    write and its commit-log entry is appended a second time."""
     cfg = cfg or PipelineConfig()
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         written = lognorm.written_records(batch_df)
         rendered = writers.render_jsonl(written)
         rendered.write.mode("append").text(output_path)
-        if batch_hook is not None:
-            batch_hook(batch_df, batch_id)
 
     writer = df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
     if trigger_once:

@@ -8,7 +8,11 @@ State contract per user_id: (burst_start_epoch_s, n_errors, alerted).
 An error event extends the current burst if it is within GAP_SEC of the
 burst start; otherwise a new burst opens. When a burst reaches
 THRESHOLD errors and has not alerted yet, one alert row is emitted.
-State for quiet users is dropped via the processing-time timeout.
+State for quiet users is dropped by an event-time timeout at the last
+event's ts + GAP_SEC, under a GAP_SEC watermark. Expiry cannot change
+any alert: an event later than that opens a new burst anyway, and an
+earlier one is behind the watermark. Being event-time, the timeout
+also lets an availableNow query end once its input is consumed.
 
 Scale: state is O(1) per active user; Spark shuffles by user_id once
 and the state store holds only open bursts — the design survives
@@ -85,7 +89,7 @@ def _detect(
             alerts.append((user_id, burst_start_s, n_errors))
 
     state.update((burst_start_s, n_errors, alerted))
-    state.setTimeoutDuration(GAP_SEC * 2 * 1000)
+    state.setTimeoutTimestamp((ts_all[-1] + GAP_SEC) * 1000)
     yield pd.DataFrame(
         {
             "user_id": [a[0] for a in alerts],
@@ -98,15 +102,18 @@ def _detect(
 def error_burst_alerts(events: DataFrame) -> DataFrame:
     """Streaming: one alert per (user, burst) when THRESHOLD errors land
     within GAP_SEC. `events` needs (user_id, ts, event_type) and must be
-    a streaming DataFrame (applyInPandasWithState requires one)."""
+    a streaming DataFrame (applyInPandasWithState requires one). An
+    error more than GAP_SEC older than the latest error seen in an
+    earlier micro-batch is behind the watermark and dropped as late."""
     errors = events.filter(F.col("event_type") == "error").select("user_id", "ts")
     return (
-        errors.groupBy("user_id")
+        errors.withWatermark("ts", f"{GAP_SEC} seconds")
+        .groupBy("user_id")
         .applyInPandasWithState(
             _detect,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import fields
 
 import pytest
 
@@ -621,3 +622,41 @@ def test_cli_reference_readme_invocation_verbatim(spark, tmp_path, monkeypatch):
     assert parsed.dlq_path == "z"
     assert parsed.max_retries == 7
     assert parsed.rotate_max_bytes == 123
+
+
+def test_every_config_field_is_set_by_its_flag(monkeypatch):
+    """Each PipelineConfig field has a flag, and resolve_config sets the
+    field from it (a flag whose dest is a field name needs no table)."""
+    for key in list(os.environ):
+        if key.startswith("ETL_"):
+            monkeypatch.delenv(key)
+    flags = {
+        "input_path": ("--input", "in.jsonl", "in.jsonl"),
+        "output_path": ("--output-path", "out", "out"),
+        "report_path": ("--report-path", "rep.json", "rep.json"),
+        "dlq_path": ("--dlq-path", "dlq", "dlq"),
+        "output_type": ("--output-type", "rotate", "rotate"),
+        "output_max_bytes": ("--rotate-max-bytes", "2048", 2048),
+        "output_max_files": ("--rotate-max-files", "9", 9),
+        "filter_levels": ("--filter-levels", "ERROR;FATAL", ("ERROR", "FATAL")),
+        "filter_services": ("--filter-services", "a,b", ("a", "b")),
+        "redact_keys": ("--redact-keys", "password", ("password",)),
+        "transforms": ("--transforms", "filter_redact,annotate", ("filter_redact", "annotate")),
+        "max_workers": ("--max-workers", "8", 8),
+        "queue_size": ("--queue-size", "64", 64),
+        "max_retries": ("--max-retries", "6", 6),
+        "backoff_base_ms": ("--backoff-base-ms", "10", 10),
+        "backoff_max_ms": ("--backoff-max-ms", "100", 100),
+        "jitter_pct": ("--jitter-pct", "0.3", 0.3),
+        "batch_size": ("--batch-size", "500", 500),
+        "flush_interval_ms": ("--flush-interval-ms", "250", 250),
+        "shutdown_timeout_seconds": ("--shutdown-timeout-seconds", "15", 15),
+        "log_level": ("--log-level", "debug", "debug"),
+        "log_format": ("--log-format", "text", "text"),
+    }
+    assert set(flags) == {f.name for f in fields(PipelineConfig)}
+    argv = [tok for flag, sample, _ in flags.values() for tok in (flag, sample)]
+    cfg = cli.resolve_config(cli.build_parser().parse_args(argv))
+    for name, (flag, _, want) in flags.items():
+        assert want != getattr(PipelineConfig(), name), name
+        assert getattr(cfg, name) == want, (name, flag)

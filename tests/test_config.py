@@ -7,6 +7,7 @@ overrides.
 """
 
 import json
+import logging
 
 import pytest
 
@@ -301,3 +302,23 @@ def test_mini_yaml_round_trip(cfg_dict):
         else:
             want = expect(v)
             assert got == want and type(got) is type(want), (k, got, want)
+
+
+def test_log_settings_in_any_case_reach_setup_logging(tmp_path):
+    """validate accepts log_level/log_format in any case, so
+    setup_logging must accept the same values (an upper-case env value
+    used to pass validation and then crash start-up)."""
+    from k8s_log_etl_spark.logging_setup import setup_logging
+
+    p = tmp_path / "cfg.yaml"
+    p.write_text("log_format: Text\nlog_level: WARN\n")
+    for cfg in (
+        load_config(env={"ETL_LOG_FORMAT": "JSON", "ETL_LOG_LEVEL": "Debug"}),
+        load_config(path=str(p), env={}),
+    ):
+        logger = setup_logging(cfg.log_level, cfg.log_format)
+        assert logger.level == logging.getLevelName(cfg.log_level.upper())
+    with pytest.raises(ValueError, match="invalid log_level"):
+        load_config(env={"ETL_LOG_LEVEL": "loud"})
+    with pytest.raises(ValueError, match="invalid log level"):
+        setup_logging(level="loud")

@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import json
-import time
 
 from k8s_log_etl_spark.streaming import stateful
 
@@ -51,16 +50,9 @@ def test_error_burst_alerts_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    # An availableNow query over this operator never terminates: the
-    # processing-time timeout makes every no-data batch request another
-    # one. availableNow runs no-data batches only once every file is
-    # consumed, so stop after the first one commits.
-    deadline = time.monotonic() + 120
-    while time.monotonic() < deadline and not any(
-        p["numInputRows"] == 0 for p in q.recentProgress
-    ):
-        time.sleep(0.2)
-    q.stop()
+    # availableNow ends once the input is consumed: the operator's
+    # event-time timeout schedules no further batches.
+    assert q.awaitTermination(120)
 
     rows = spark.sql("SELECT * FROM burst_alerts").collect()
     got = sorted((r["user_id"], r["n_errors"]) for r in rows)
